@@ -144,10 +144,18 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     narrower than the session's parallelism; an already-wide input is
     returned untouched. Only for queries whose results are
     row-independent (per-row maps / integer or rounded-decimal
-    aggregates) — it changes partitioning, never values."""
+    aggregates) — it changes partitioning, never values.
+
+    PRECONDITION: ``df`` is a bare scan (or scan + narrow filters/
+    projections). The width probe calls ``df.rdd``, which under AQE
+    EXECUTES every upstream query stage of a plan that has an exchange
+    and then reports the pre-AQE shuffle partition count — so applied
+    downstream of a shuffle it runs the upstream work twice and
+    measures the wrong width."""
     width = spark.sparkContext.defaultParallelism
     # partition count of the *physical* plan (scan splits for a bare
-    # read); planning-only — no job runs, and consumers keep using `df`
+    # read); planning-only for a scan — no job runs, and consumers keep
+    # using `df`
     if df.rdd.getNumPartitions() >= width:
         return df
     return df.repartition(width)

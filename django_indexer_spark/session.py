@@ -16,13 +16,23 @@ Nothing here is specific to local mode except the master default.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+@functools.cache
+def _remove_at_exit(path: str) -> None:
+    """Register a best-effort rmtree of ``path`` at interpreter exit, once
+    per path and process however often ``get_spark`` runs."""
+    atexit.register(shutil.rmtree, path, True)
 
 
 def get_spark(app_name: str = "django-indexer-spark", **extra_conf: str) -> SparkSession:
@@ -55,10 +65,7 @@ def get_spark(app_name: str = "django-indexer-spark", **extra_conf: str) -> Spar
             st = os.statvfs("/dev/shm")
             if st.f_bavail * st.f_frsize >= 8 * 1024**3:
                 local_dir = f"/dev/shm/spark_graft_local/{os.getpid()}"
-                import atexit
-                import shutil
-
-                atexit.register(shutil.rmtree, local_dir, True)
+                _remove_at_exit(local_dir)
         except OSError:
             pass
     builder = (

@@ -72,12 +72,6 @@ def upsert(
     )
 
 
-def dedup_last_writer(df: DataFrame, natural_key: list[str], version_col: str) -> DataFrame:
-    """Collapse duplicates inside one batch (replay overlap, T2's
-    checkpoint-1 re-read)."""
-    return upsert(None, df, natural_key, version_col)
-
-
 def merge_statement(
     target: str,
     source: str,

@@ -16,7 +16,8 @@ trigger O(batch size + touched buckets) and removes the truncation window:
 - every rewrite lands in a NEW versioned directory
   (``b{bucket}/v{batch_id}``); nothing is ever deleted in place. Readers
   assemble the table from one small JSON manifest mapping
-  bucket -> current version;
+  bucket -> current version and holding the table's Spark schema, so
+  opening a snapshot infers nothing from parquet footers (as Delta does);
 - publishing is an atomic ``os.replace`` of that one manifest file. A
   crash anywhere — mid-staging, mid-rename, mid-GC — leaves the previous
   manifest pointing at fully-written directories, so there is NO state in
@@ -55,9 +56,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .merge import upsert
 
@@ -132,13 +135,19 @@ def current_paths(
     ]
 
 
+def _table_schema(table_dir: str, manifest: dict) -> StructType:
+    """The published schema: data columns, ``__bucket``, partition column."""
+    if "schema" not in manifest:
+        raise ValueError(f"{table_dir}: manifest has no schema — rebuild the table")
+    return StructType.fromJson(manifest["schema"])
+
+
 def read_table(
     spark: SparkSession,
     table_dir: str,
     buckets: list[int] | None = None,
     keep_bucket_col: bool = False,
     at_batch: int | None = None,
-    merge_schema: bool = True,
 ) -> DataFrame | None:
     """Current snapshot of a silver table (None if absent/empty). With
     ``buckets``, reads only those bucket dirs — partition pruning by
@@ -146,12 +155,18 @@ def read_table(
     With ``at_batch``, time-travel: read the table as of that retained
     batch's snapshot manifest (requires merge_batch(retain_history=True)).
 
+    Every scan takes the manifest's schema: opening reads no parquet
+    footer and runs no Spark job; bucket versions older than an additive
+    schema evolution read the newer columns as NULL.
+
     Tables created with ``partition_col`` (date-partitioned silver, SURVEY
     §4's donated_at composite-index mapping) read as a union of per-
     bucket-version scans, each rooted at its version dir so Spark's hive-
     style partition discovery restores the partition column — a range
     predicate on it then prunes FILES inside every scan (PartitionFilters,
-    guarded by tests/test_storage.py). One scan per current bucket version
+    guarded by tests/test_storage.py). One scan cannot cover them: Spark
+    refuses several partition roots in one scan ("Conflicting directory
+    structures detected"). One scan per current bucket version
     (≤ n_buckets): fine at the tens-of-buckets scale this store targets;
     a thousands-of-buckets deployment wants the date-major layout of a
     real lakehouse format instead (module docstring).
@@ -162,29 +177,14 @@ def read_table(
     paths = current_paths(table_dir, manifest, buckets)
     if not paths:
         return None
-    # mergeSchema: bucket versions written before an additive schema
-    # evolution (merge_batch(evolve_schema=True)) lack the newer columns;
-    # footer-merge surfaces the superset with NULLs — without it the scan
-    # schema is whichever file is sampled first. Per-read footer cost is
-    # bounded by the bucket count. ``merge_schema=False`` skips the
-    # all-footer read for tables whose writer NEVER evolves the schema
-    # (the streaming LSH/ANN/pHash indexes — fixed columns for the
-    # table's life): every probe/merge re-read then samples one footer
-    # instead of all current bucket versions (guide §6 small-file
-    # overhead; measured on the index gates, round 13).
-    ms = "true" if merge_schema else "false"
+    schema = _table_schema(table_dir, manifest)
     if manifest.get("partition_col"):
-        parts = [
-            spark.read.option("basePath", p)
-            .option("mergeSchema", ms)
-            .parquet(p)
-            for p in paths
-        ]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p, allowMissingColumns=True)
+        df = reduce(
+            DataFrame.unionByName,
+            [spark.read.schema(schema).option("basePath", p).parquet(p) for p in paths],
+        )
     else:
-        df = spark.read.option("mergeSchema", ms).parquet(*paths)
+        df = spark.read.schema(schema).parquet(*paths)
     return df if keep_bucket_col else df.drop(BUCKET_COL)
 
 
@@ -251,7 +251,6 @@ def merge_batch(
     bucket_by: list[str] | None = None,
     evolve_schema: bool = False,
     touched_buckets: list[int] | None = None,
-    merge_schema: bool = True,
 ) -> list[int]:
     """Merge one batch into the table, rewriting only touched buckets.
     Returns the touched bucket ids (empty batch -> no-op, []).
@@ -262,20 +261,22 @@ def merge_batch(
     streaming index gates collect that set once per micro-batch for the
     probe and hand it here). Skips one collect job AND the incoming
     persist per merge (with the collect gone, the staged write is the
-    frame's only consumer). CONTRACT: it must be the EXACT distinct set —
-    a superset would publish manifest entries whose staged dirs hold no
-    files; a subset would silently drop rows from the merge.
+    frame's only consumer). CONTRACT: it must be the EXACT distinct set.
+    A subset silently drops rows from the merge. A superset bucket that
+    holds no rows, in the table or the batch, stages nothing: the merge
+    raises ValueError before any rename, leaving the manifest and the
+    version dirs as they were.
 
-    ``merge_schema`` forwards to ``read_table`` for the existing-rows
-    read; pass False only for tables whose schema never evolves (the
-    index gates), where the all-footer merge is pure per-batch cost.
+    The manifest records the written frame's Spark schema (``schema``);
+    the batch-column check below and every ``read_table`` scan use it.
 
     ``evolve_schema=True`` permits ADDITIVE schema evolution: a batch may
-    carry columns the table has never seen (pre-evolution rows read as
-    NULL — read_table's mergeSchema surfaces the superset) and may omit
-    columns older batches wrote (an omitted column NULLs on rows the new
-    batch overwrites — versioned-row semantics). Key/version/bucket_by/
-    partition columns must always be present.
+    carry columns the table has never seen and may omit columns older
+    batches wrote (an omitted column NULLs on rows the new batch
+    overwrites — versioned-row semantics). The published schema is the
+    superset, so bucket versions written before a column existed read it
+    as NULL. Key/version/bucket_by/partition columns must always be
+    present.
 
     Idempotent per (incoming, batch_id): Structured Streaming's replay of
     a failed batch re-stages and re-publishes the identical result.
@@ -334,7 +335,9 @@ def merge_batch(
         if not touched:
             return []
         os.makedirs(table_dir, exist_ok=True)
-        manifest = read_manifest(table_dir) or {
+        manifest = read_manifest(table_dir)
+        known = None if manifest is None else _table_schema(table_dir, manifest)
+        manifest = manifest or {
             "n_buckets": n_buckets,
             "buckets": {},
             **({"partition_col": partition_col} if partition_col else {}),
@@ -360,27 +363,21 @@ def merge_batch(
         # the batch happens to touch (an empty target bucket must not
         # exempt a drifting batch from the check)
         inc_cols = sorted(incoming.columns)
-        known_cols = manifest.get("columns")
-        if (
-            known_cols is not None
-            and set(inc_cols) != set(known_cols)
-            and not evolve_schema
-        ):
-            raise ValueError(
-                f"{table_dir}: batch columns {inc_cols} != table columns "
-                f"{known_cols} — pass evolve_schema=True for additive "
-                "schema evolution"
-            )
-        published_cols = sorted(set(known_cols or inc_cols) | set(inc_cols))
+        if known is not None and not evolve_schema:
+            known_cols = sorted(f.name for f in known if f.name != BUCKET_COL)
+            if inc_cols != known_cols:
+                raise ValueError(
+                    f"{table_dir}: batch columns {inc_cols} != table columns "
+                    f"{known_cols} — pass evolve_schema=True for additive "
+                    "schema evolution"
+                )
         # existing rows for ONLY the touched buckets (same-key rows can't
-        # live anywhere else — the bucket hash is a pure key function)
-        existing = read_table(
-            spark,
-            table_dir,
-            buckets=touched,
-            keep_bucket_col=True,
-            merge_schema=merge_schema,
-        )
+        # live anywhere else — the bucket hash is a pure key function).
+        # When every touched bucket is new, merge against the empty table
+        # so the written frame still carries the columns this batch omits.
+        existing = read_table(spark, table_dir, buckets=touched, keep_bucket_col=True)
+        if existing is None and known is not None:
+            existing = spark.createDataFrame([], known)
         merged = upsert(
             existing,
             inc,
@@ -408,6 +405,11 @@ def merge_batch(
             .mode("overwrite")
             .parquet(staging)
         )
+        # only a caller-supplied superset leaves a touched bucket unstaged
+        missing = [b for b in touched if not os.path.isdir(f"{staging}/__bp={b}")]
+        if missing:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise ValueError(f"{table_dir}: touched_buckets {missing} hold no rows")
 
         # move staged bucket dirs into place as NEW versions (pure renames;
         # current versions remain untouched and referenced by the manifest)
@@ -431,7 +433,7 @@ def merge_batch(
             "n_buckets": n_buckets,
             "buckets": new_buckets,
             "last_batch_id": batch_id,
-            "columns": published_cols,
+            "schema": merged.schema.jsonValue(),
             **({"partition_col": partition_col} if partition_col else {}),
             **({"bucket_by": bucket_by} if bucket_by else {}),
         }

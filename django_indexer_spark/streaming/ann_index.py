@@ -127,11 +127,7 @@ def probe(
         probe_buckets = sorted(
             r[0] for r in queries.select(bucket_of.alias("b")).distinct().collect()
         )
-    # merge_schema=False: the ANN index's schema is fixed for the
-    # table's life (same writer every batch) — skip the all-footer merge
-    existing = silver.read_table(
-        spark, index_dir, buckets=probe_buckets, merge_schema=False
-    )
+    existing = silver.read_table(spark, index_dir, buckets=probe_buckets)
     cand = new_rows.select("vec_id", "bucket", "vnorm", "embedding")
     if existing is not None:
         cand = cand.unionByName(
@@ -188,7 +184,6 @@ def update(
         n_buckets=n_buckets,
         bucket_by=["bucket"],
         touched_buckets=touched,
-        merge_schema=False,
     )
 
 

@@ -177,7 +177,7 @@ def polite_frontier_tick(
     that is passed pre-parsed, so a caller that hoists the parse but
     skips the latest_col dedup gets silently different robots
     semantics. Enforced below: passing ``latest_col`` alongside a
-    pre-parsed frame raises."""
+    pre-parsed frame raises, also when only one side is pre-parsed."""
     from ..functions.urls import (
         apply_robots,
         delays_from_robots,
@@ -187,10 +187,11 @@ def polite_frontier_tick(
 
     if latest_col is not None and (rules is not None or delays is not None):
         raise ValueError(
-            "latest_col is ignored for pre-parsed rules/delays frames — "
-            "apply the refetch-dedup when building them "
-            "(rules_from_robots/delays_from_robots(latest_col=...)) and "
-            "pass latest_col=None here"
+            "latest_col is ignored for pre-parsed rules/delays frames, "
+            "including the mixed case where one side is pre-parsed and the "
+            "other is parsed in this call — pre-parse both sides with the "
+            "refetch-dedup (rules_from_robots/delays_from_robots("
+            "latest_col=...)) and pass latest_col=None here"
         )
     new_state = frontier_update(gold, batch_df, url_col)
     unseen = (

@@ -103,11 +103,7 @@ def probe(
     """
     if probe_buckets is None:
         probe_buckets = touched_buckets(new_bands, n_buckets)
-    # merge_schema=False: the band index's schema is fixed for the
-    # table's life (same writer every batch) — skip the all-footer merge
-    existing = silver.read_table(
-        spark, index_dir, buckets=probe_buckets, merge_schema=False
-    )
+    existing = silver.read_table(spark, index_dir, buckets=probe_buckets)
     if existing is not None and before_version is not None:
         existing = existing.filter(F.col("version") < F.lit(int(before_version)))
     within = dedup.minhash_candidate_pairs(
@@ -160,7 +156,6 @@ def update(
         n_buckets=n_buckets,
         bucket_by=["band", "band_key"],
         touched_buckets=touched,
-        merge_schema=False,
     )
 
 

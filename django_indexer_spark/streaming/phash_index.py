@@ -99,11 +99,7 @@ def probe(
             F.lit("batch").alias("source"),
         )
     )
-    # merge_schema=False: the pHash index's schema is fixed for the
-    # table's life (same writer every batch) — skip the all-footer merge
-    existing = silver.read_table(
-        spark, index_dir, buckets=probe_buckets, merge_schema=False
-    )
+    existing = silver.read_table(spark, index_dir, buckets=probe_buckets)
     if existing is None:
         return within
     vs_index = (
@@ -154,7 +150,6 @@ def update(
         n_buckets=n_buckets,
         bucket_by=["band", "chunk"],
         touched_buckets=touched,
-        merge_schema=False,
     )
 
 

@@ -1,27 +1,36 @@
 """Ingest pipeline assembly — batch core + Structured Streaming wrapper
 (SURVEY.md §2.9 T1-T8, §7 phase 6).
 
-``run_batch`` is the single normalize-and-merge step shared by all three
-execution modes the reference runs as separate code paths:
+Two entry points share ``ENTITY_PIPELINES`` (entity -> normalizer,
+natural key, conflict policy), the single definition of what the
+reference's three execution modes write:
 
   - live stream  (runindexer → asyncio loop, tasks.py:28-93)
   - spot replay  (runspotindexer over a height range, tasks.py:114-126)
   - backfill     (populatedata.py contract scans)
 
-Batch/replay call ``run_batch`` directly; streaming applies the same
-deterministic dataflow per micro-batch via ``foreachBatch``. Delivery is
-at-least-once (checkpointLocation tracks progress, T2 — replacing the
-reference's BlockHeight singleton, utils.py:1194-1203); the sink makes
-the VISIBLE state effectively-once: merges are keyed + versioned (T3) so
-replays collapse, and sources.silver publishes each batch with an atomic
-manifest swap, so a crashed batch is either fully visible or not at all.
-At-least-once replay overlap (the reference resumes at height-1,
-tasks.py:104-107) is harmless by construction.
+``stream_ingest`` is the production path for all three: a file-source
+stream over the lake (``available_now=True`` drains a fixed range, the
+replay/backfill shape) whose ``foreachBatch`` merges every entity into
+its bucketed silver table with ``sources.silver.merge_batch``.
+``run_batch`` is a separate in-memory upsert of the same normalizers
+over frames, with no silver store; streaming does not call it.
+
+Delivery is at-least-once (checkpointLocation tracks progress, T2 —
+replacing the reference's BlockHeight singleton, utils.py:1194-1203);
+the sink makes the VISIBLE state effectively-once per table: merges are
+keyed + versioned (T3) so replays collapse, and sources.silver publishes
+each TABLE with an atomic manifest swap, so a crashed batch leaves each
+table either fully updated or untouched. Atomicity is per table, not per
+batch: the entity tables publish one after another, so a reader between
+two publishes, or after a crash mid-batch until the replay, can see
+batch N in some tables and N-1 in others. At-least-once replay overlap
+(the reference resumes at height-1, tasks.py:104-107) is harmless by
+construction.
 
 Scale notes: each entity merge shuffles on its natural key only; the
-bronze explode is narrow; the per-batch work is a fixed set of ~8
-independent jobs that Spark schedules concurrently (the reference's
-multi-queue isolation T7 maps to fair-scheduler pools if desired).
+bronze explode is narrow and runs once per trigger (the prepared frame
+is persisted); the entity merges run one after another.
 """
 
 from __future__ import annotations

@@ -17,6 +17,33 @@ from pyspark.sql import functions as F
 from django_indexer_spark.sources.storage import read_pruned, write_clustered
 
 
+def _open_jobs(spark, open_table):
+    """(frame, Spark job ids) of one ``open_table()`` call — opening a
+    silver table must only plan, never run a job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"silver-open-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "open a silver table")
+    try:
+        df = open_table()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _manifest_fields(silver, d):
+    """name -> type of the schema the table's manifest records."""
+    from pyspark.sql.types import StructType
+
+    return {f.name: f.dataType for f in StructType.fromJson(silver.read_manifest(d)["schema"])}
+
+
+def _fields(df):
+    return {f.name: f.dataType for f in df.schema}
+
+
 def test_write_clustered_partitions_prune_and_cluster_sorts(spark, tmp_path):
     out = str(tmp_path / "donations_gold")
     df = spark.range(0, 1000).select(
@@ -130,9 +157,19 @@ def test_silver_date_partition_prunes_files(spark, tmp_path):
     # layout: every bucket version contains hive date dirs
     assert glob.glob(f"{d}/b*/v1/donated_date=2024-01-0*"), "no hive date dirs"
 
+    # opening reads the manifest schema: no footer inference, no job —
+    # full and bucket-pruned — and the manifest describes the frame
+    t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
+    assert jobs == []
+    _, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d, buckets=[0, 1]))
+    assert jobs == []
+    assert _manifest_fields(silver, d) == _fields(
+        silver.read_table(spark, d, keep_bucket_col=True)
+    )
+    assert t.columns[-1] == "donated_date"  # restored by partition discovery
+
     # range predicate prunes: PartitionFilters in every scan + only
     # matching dirs' files are touched
-    t = silver.read_table(spark, d)
     q = t.filter(
         (F.col("donated_date") >= "2024-01-02") & (F.col("donated_date") <= "2024-01-03")
     )
@@ -187,8 +224,14 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
         df([("k1", 11, 2, "usd")], "k string, amount long, version long, currency string"),
         ["k"], "version", batch_id=2, n_buckets=4, evolve_schema=True,
     )
-    t = silver.read_table(spark, d)
+    # the manifest schema is the superset: opening needs no footer merge
+    # and runs no job
+    t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
+    assert jobs == []
     assert "currency" in t.columns  # superset schema across old buckets
+    assert _manifest_fields(silver, d) == _fields(
+        silver.read_table(spark, d, keep_bucket_col=True)
+    )
     got = {r["k"]: (r["amount"], r["currency"]) for r in t.collect()}
     assert got == {"k1": (11, "usd"), "k2": (20, None), "k3": (30, None)}
 
@@ -198,7 +241,9 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
         .select(silver.bucket_expr(["k"], 4).alias("b"))
         .collect()[0]["b"]
     )
-    sub = silver.read_table(spark, d, buckets=[b])
+    sub, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d, buckets=[b]))
+    assert jobs == []
+    assert "currency" in sub.columns
     assert sub.filter(F.col("k") == "k2").count() == 1
 
     # batch 3 OMITS the original amount column; the row it overwrites
@@ -208,8 +253,33 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
         df([("k2", 3, "eur")], "k string, version long, currency string"),
         ["k"], "version", batch_id=3, n_buckets=4, evolve_schema=True,
     )
-    got = {r["k"]: (r["amount"], r["currency"]) for r in silver.read_table(spark, d).collect()}
+    t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
+    assert jobs == []
+    assert _manifest_fields(silver, d) == _fields(
+        silver.read_table(spark, d, keep_bucket_col=True)
+    )
+    got = {r["k"]: (r["amount"], r["currency"]) for r in t.collect()}
     assert got == {"k1": (11, "usd"), "k2": (None, "eur"), "k3": (30, None)}
+
+    # a batch landing only in a NEW bucket and omitting a column keeps
+    # that column in the published schema
+    used = set(silver.read_manifest(d)["buckets"])
+    new_key = next(
+        r["k"]
+        for r in df([(f"n{i}",) for i in range(32)], "k string")
+        .select("k", silver.bucket_expr(["k"], 4).alias("b"))
+        .collect()
+        if str(r["b"]) not in used
+    )
+    silver.merge_batch(
+        spark, d,
+        df([(new_key, 5, "gbp")], "k string, version long, currency string"),
+        ["k"], "version", batch_id=5, n_buckets=4, evolve_schema=True,
+    )
+    got = {r["k"]: (r["amount"], r["currency"]) for r in silver.read_table(spark, d).collect()}
+    assert got == {
+        "k1": (11, "usd"), "k2": (None, "eur"), "k3": (30, None), new_key: (None, "gbp")
+    }
 
     # without evolve_schema a new column is a hard error, not silent drift
     import pytest as _pytest
@@ -220,6 +290,16 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
             df([("k4", 1, 4, True)], "k string, amount long, version long, extra boolean"),
             ["k"], "version", batch_id=4, n_buckets=4,
         )
+
+    # readers never infer a schema: a manifest without one names the table
+    import json
+
+    m = silver.read_manifest(d)
+    del m["schema"]
+    with open(os.path.join(d, "manifest.json"), "w") as f:
+        json.dump(m, f)
+    with _pytest.raises(ValueError, match="evolving: manifest has no schema"):
+        silver.read_table(spark, d)
 
 
 def test_zorder_layout_prunes_on_non_leading_column(spark, tmp_path):

@@ -13,8 +13,11 @@ directory of block JSON files and verifies:
 from __future__ import annotations
 
 import base64
+import glob
 import json
 import os
+
+import pytest
 
 from django_indexer_spark.sources import silver
 from django_indexer_spark.streaming.pipeline import stream_ingest
@@ -591,8 +594,9 @@ def test_frontier_update_split_invariance_and_replay(spark):
 def test_silver_merge_with_caller_supplied_touched_buckets(spark, tmp_path):
     """merge_batch(touched_buckets=...) — the streaming index gates
     collect the batch's bucket set ONCE and hand it to both probe and
-    merge (round 13): the resulting table must be identical to the
-    self-collecting path, batch by batch."""
+    merge: the resulting table must be identical to the self-collecting
+    path, batch by batch. A superset naming a bucket with no rows raises
+    before anything is renamed or published."""
     auto, given = str(tmp_path / "auto"), str(tmp_path / "given")
     batches = [
         [("a", "a1", 1), ("b", "b1", 1)],
@@ -612,7 +616,7 @@ def test_silver_merge_with_caller_supplied_touched_buckets(spark, tmp_path):
         )
         got_given = silver.merge_batch(
             spark, given, inc, ["k"], "version", batch_id=i, n_buckets=4,
-            touched_buckets=touched, merge_schema=False,
+            touched_buckets=touched,
         )
         assert got_auto == got_given == touched
 
@@ -625,3 +629,17 @@ def test_silver_merge_with_caller_supplied_touched_buckets(spark, tmp_path):
     }
     ma, mg = silver.read_manifest(auto), silver.read_manifest(given)
     assert ma["buckets"] == mg["buckets"]
+
+    # superset: three keys fill at most three of the four buckets, so one
+    # bucket is empty in the table and in the batch
+    empty = next(b for b in range(4) if str(b) not in mg["buckets"])
+    inc = _kv(spark, [("a", "a4", 4)])
+    touched = [r[0] for r in inc.select(silver.bucket_expr(["k"], 4)).distinct().collect()]
+    with pytest.raises(ValueError, match=rf"touched_buckets \[{empty}\]"):
+        silver.merge_batch(
+            spark, given, inc, ["k"], "version", batch_id=4, n_buckets=4,
+            touched_buckets=sorted(touched + [empty]),
+        )
+    assert silver.read_manifest(given) == mg
+    assert not glob.glob(os.path.join(given, "b*", "v4"))
+    assert state(given) == {"a": ("a2", 2), "b": ("b3", 3), "c": ("c2", 2)}
