@@ -54,24 +54,6 @@ def date_key(col: Column | str) -> Column:
     return F.date_format(F.col(col) if isinstance(col, str) else col, "dd-MM-yyyy")
 
 
-# -- C6: decimal scaling amount / 10^decimals (tokens/models.py:59-62,
-#        base/utils.py:11-13). Exact decimal division, NOT double math.
-
-
-def format_amount(amount: Column | str, decimals: Column | str) -> Column:
-    a = F.col(amount) if isinstance(amount, str) else amount
-    d = F.col(decimals) if isinstance(decimals, str) else decimals
-    return a.cast("decimal(38,0)") / F.pow(F.lit(10.0), d).cast("decimal(38,0)")
-
-
-# -- C7: USD multiply, rounded to the reference's DecimalField(20,2)
-#        (donations/models.py:228-243, pots/models.py:580)
-
-
-def to_usd(formatted_amount: Column, price_usd: Column) -> Column:
-    return F.round(formatted_amount * price_usd, 2).cast("decimal(20,2)")
-
-
 # -- C8: net-amount arithmetic with null-as-0 fees (utils.py:875-884,
 #        populatedata.py:168-171,417-426)
 

@@ -3,7 +3,7 @@
 Most reference predicates are single Column expressions; they appear inline
 in plans/. This module keeps the ones with actual shape: the OR-of-null-
 checks repair selector (F6), the JSON-regex category filter (F7), the
-live-window predicate (F4), and the stream-routing predicates (F8-F10).
+live-window predicate (F4), and the stream-routing predicates (F9-F10).
 
 All are pure Column builders — Catalyst pushes them into the parquet scan
 (PushedFilters) because nothing here is a UDF.
@@ -47,13 +47,6 @@ def json_array_regex(col: Column | str, path: str, value: str) -> Column:
     (lists/api.py:157-161: plCategories__iregex=r'[.*?"{cat}".*?]')."""
     c = F.col(col) if isinstance(col, str) else col
     return F.get_json_object(c, path).rlike(f'(?i)\\[.*?"{value}".*?\\]')
-
-
-def successful(status_kind: Column | str) -> Column:
-    """F8 — keep receipt only on SuccessReceiptId/SuccessValue
-    (handler.py:75-82)."""
-    c = F.col(status_kind) if isinstance(status_kind, str) else status_kind
-    return c.isin("SuccessReceiptId", "SuccessValue")
 
 
 def receiver_suffix(receiver: Column | str, *tlas: str) -> Column:

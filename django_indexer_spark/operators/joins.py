@@ -342,84 +342,3 @@ def grid_join_2d(
         .filter(dist2 <= F.lit(int(radius) * int(radius)))
         .select(*l_keep, *r_keep, dist2.alias("dist2"))
     )
-
-
-def interval_overlap_pairs(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    start: Column,
-    end: Column,
-    bucket_width: int,
-) -> DataFrame:
-    """Count overlapping interval PAIRS within each group — the
-    interval×interval self-join ("how many same-type events ran
-    concurrently"), which is the genuinely hard temporal join: both
-    sides are ranges, so neither an equi-key nor an as-of order
-    exists. Returns per group: n_pairs.
-
-    Technique: time buckets of ``bucket_width`` (units of start/end);
-    every interval replicates to each bucket it touches (fanout =
-    span/width + 1 — pick width ≥ the typical span so fanout ≈ 2),
-    candidates meet in an EQUI-join on (group, bucket), the exact
-    a.s < b.e AND b.s < a.e test prunes, and the double-count hazard
-    of bucket blocking is killed arithmetically: a pair is COUNTED
-    ONLY in the bucket containing max(a.start, b.start) — every
-    surviving pair has exactly one such bucket, so no distinct pass
-    over the pair set is ever needed (the classic spatial-join
-    reporting trick). ``id_col`` orders the pair (a < b) so each
-    unordered pair appears once.
-
-    Scale: shuffle ∝ Σ per-interval bucket fanout; skew = the densest
-    (group, bucket) cell — shrink the width or salt the hot cell. All
-    integers."""
-    w = int(bucket_width)
-    base = df.select(
-        F.col(group_col).alias("__g"),
-        F.col(id_col).alias("__id"),
-        start.cast("long").alias("__s"),
-        end.cast("long").alias("__e"),
-    )
-    spans = base.select(
-        "__g",
-        "__id",
-        "__s",
-        "__e",
-        F.explode(
-            F.sequence(
-                F.expr(f"CAST(floor(__s / {w}) AS BIGINT)"),
-                F.expr(f"CAST(floor((__e - 1) / {w}) AS BIGINT)"),
-            )
-        ).alias("__b"),
-    )
-    a = spans.select(
-        F.col("__g"),
-        F.col("__b"),
-        F.col("__id").alias("__ida"),
-        F.col("__s").alias("__sa"),
-        F.col("__e").alias("__ea"),
-    )
-    b = spans.select(
-        F.col("__g").alias("__g2"),
-        F.col("__b").alias("__b2"),
-        F.col("__id").alias("__idb"),
-        F.col("__s").alias("__sb"),
-        F.col("__e").alias("__eb"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("__g") == F.col("__g2"))
-        & (F.col("__b") == F.col("__b2"))
-        & (F.col("__ida") < F.col("__idb")),
-    ).filter(
-        (F.col("__sa") < F.col("__eb"))
-        & (F.col("__sb") < F.col("__ea"))
-        # count only in the bucket holding max(start_a, start_b)
-        & (
-            F.expr(f"CAST(floor(greatest(__sa, __sb) / {w}) AS BIGINT)")
-            == F.col("__b")
-        )
-    )
-    return pairs.groupBy(F.col("__g").alias(group_col)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs")
-    )

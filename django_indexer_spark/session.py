@@ -28,11 +28,29 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _stop_and_remove(path: str) -> None:
+    # on Linux the JVM outlives every atexit handler (it exits on the EOF
+    # of its stdin, after the interpreter), so a live SparkContext could
+    # still write shuffle files into ``path`` after the rmtree: stop it
+    # first. Best effort: a gateway that is already gone has nothing to stop.
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc.stop()
+        except Py4JError:
+            pass
+    shutil.rmtree(path, ignore_errors=True)
+
+
 @functools.cache
 def _remove_at_exit(path: str) -> None:
-    """Register a best-effort rmtree of ``path`` at interpreter exit, once
-    per path and process however often ``get_spark`` runs."""
-    atexit.register(shutil.rmtree, path, True)
+    """Register a best-effort rmtree of ``path`` at interpreter exit, after
+    stopping the active SparkContext, once per path and process however
+    often ``get_spark`` runs."""
+    atexit.register(_stop_and_remove, path)
 
 
 def get_spark(app_name: str = "django-indexer-spark", **extra_conf: str) -> SparkSession:
@@ -57,8 +75,9 @@ def get_spark(app_name: str = "django-indexer-spark", **extra_conf: str) -> Spar
     # must not silently land in RAM on a standalone cluster — tmpfs is
     # typically capped at half RAM and full tmpfs turns memory pressure
     # into ENOSPC, DEPLOY.md); only with ≥ 8 GiB currently free in
-    # /dev/shm; and per-PID, removed best-effort at interpreter exit so
-    # a crashed run's shuffle debris doesn't occupy RAM until reboot.
+    # /dev/shm; and per-PID, removed best-effort at interpreter exit (after
+    # the SparkContext stops) so shuffle debris doesn't occupy RAM until
+    # reboot.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and master.startswith("local") and os.access("/dev/shm", os.W_OK):
         try:

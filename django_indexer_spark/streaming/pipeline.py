@@ -11,8 +11,9 @@ reference's three execution modes write:
 
 ``stream_ingest`` is the production path for all three: a file-source
 stream over the lake (``available_now=True`` drains a fixed range, the
-replay/backfill shape) whose ``foreachBatch`` merges every entity into
-its bucketed silver table with ``sources.silver.merge_batch``.
+replay/backfill shape) whose ``foreachBatch`` hands each micro-batch to
+``ingest_batch``, which merges every entity into its bucketed silver
+table with ``sources.silver.merge_batch``.
 ``run_batch`` is a separate in-memory upsert of the same normalizers
 over frames, with no silver store; streaming does not call it.
 
@@ -22,23 +23,28 @@ the sink makes the VISIBLE state effectively-once per table: merges are
 keyed + versioned (T3) so replays collapse, and sources.silver publishes
 each TABLE with an atomic manifest swap, so a crashed batch leaves each
 table either fully updated or untouched. Atomicity is per table, not per
-batch: the entity tables publish one after another, so a reader between
-two publishes, or after a crash mid-batch until the replay, can see
-batch N in some tables and N-1 in others. At-least-once replay overlap
-(the reference resumes at height-1, tasks.py:104-107) is harmless by
-construction.
+batch: the entity merges run concurrently and each table publishes when
+its own merge finishes, in no fixed order, so a reader during a batch,
+or after a crash mid-batch until the replay, can see batch N in some
+tables and N-1 in others. At-least-once replay overlap (the reference
+resumes at height-1, tasks.py:104-107) is harmless by construction.
 
 Scale notes: each entity merge shuffles on its natural key only; the
 bronze explode is narrow and runs once per trigger (the prepared frame
-is persisted); the entity merges run one after another.
+is persisted and materialized before any merge); the entity merges run
+concurrently on a pool as wide as the cluster's default parallelism, so
+one merge's small jobs fill the cores another merge leaves idle (FAIR
+scheduling, session.get_spark).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..sources import normalize, silver
 from ..sources.lake import explode_receipts, read_lake_stream
@@ -200,6 +206,71 @@ def run_batch(
     return out
 
 
+def ingest_batch(
+    spark: SparkSession,
+    prepared: DataFrame,
+    out_dir: str,
+    batch_id: int,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
+) -> None:
+    """Merge every entity of one persisted prepared bronze frame into its
+    silver table under ``out_dir``, the entities concurrently.
+
+    A trigger is bound by Spark job latency, not compute: each merge is a
+    chain of small jobs, so merges run side by side on a pool of
+    ``min(len(ENTITY_PIPELINES), defaultParallelism)`` threads and FAIR
+    scheduling interleaves their jobs. Each task builds its own entity
+    plan, so the first merge starts as soon as the frame is cached.
+    Worker threads inherit the caller's local properties
+    (``inheritable_thread_target``): a streaming query's scheduler pool
+    and its cancellation job group reach every merge job.
+
+    Every task is joined before returning, so the caller may unpersist
+    ``prepared`` afterwards; the first failure (in entity order) is then
+    re-raised and the whole batch fails, to be replayed. Tables publish
+    in no fixed order and atomicity stays per table.
+    """
+
+    def merge(name: str, fn: Callable[[DataFrame], DataFrame], key: list[str], keep: str) -> None:
+        entity = fn(prepared)
+        part = ENTITY_PARTITIONS.get(name)
+        if part is not None:
+            # upgrade path: a table created before its entity gained a
+            # partition column has partition_col=None in its manifest,
+            # and merge_batch treats partitioning as fixed at creation —
+            # adopt the TABLE's layout instead of raising on every
+            # micro-batch forever (repartition an existing table with an
+            # offline rewrite, not mid-stream)
+            existing = silver.read_manifest(f"{out_dir}/{name}")
+            if existing is not None and existing.get("partition_col") is None:
+                part = None
+        if part is not None:
+            entity = entity.withColumn(part[0], part[1]())
+        silver.merge_batch(
+            spark,
+            f"{out_dir}/{name}",
+            entity,
+            key,
+            "version",
+            keep=keep,
+            batch_id=batch_id,
+            n_buckets=n_buckets,
+            partition_col=None if part is None else part[0],
+        )
+
+    prepared.count()  # fill the cache once, not in each racing merge
+    width = min(len(ENTITY_PIPELINES), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(width) as pool:
+        # wrapped per task: the local properties are captured here, on
+        # the caller's thread, into a copy that task alone owns
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(merge), name, *spec)
+            for name, spec in ENTITY_PIPELINES.items()
+        ]
+    for fut in futures:
+        fut.result()
+
+
 def stream_ingest(
     spark: SparkSession,
     lake_path: str,
@@ -230,7 +301,8 @@ def stream_ingest(
     each other — the Spark analogue of the reference's per-queue Celery
     workers (base/celery.py beat queues). Requires
     spark.scheduler.mode=FAIR (session.get_spark sets it); the property is
-    thread-local and inherited by the streaming query's own thread.
+    thread-local, inherited by the streaming query's own thread and from
+    there by ``ingest_batch``'s merge threads.
 
     (On a Delta/Iceberg lakehouse this becomes MERGE INTO — see
     sources.merge.merge_statement; plain parquet + manifest keeps this
@@ -238,37 +310,11 @@ def stream_ingest(
     """
 
     def process_batch(lake_batch: DataFrame, batch_id: int) -> None:
-        # ~24 entity jobs share one prepared bronze frame: cache it so the
-        # JSON decode/explode runs once per trigger, not once per entity
+        # every entity plan reads one prepared bronze frame: cache it so
+        # the JSON decode/explode runs once per trigger, not once per entity
         prepared = normalize.prepare(explode_receipts(lake_batch)).persist()
         try:
-            for name, (fn, key, keep) in ENTITY_PIPELINES.items():
-                entity = fn(prepared)
-                part = ENTITY_PARTITIONS.get(name)
-                if part is not None:
-                    # upgrade path: a table created before its entity
-                    # gained a partition column has partition_col=None in
-                    # its manifest, and merge_batch treats partitioning as
-                    # fixed at creation — adopt the TABLE's layout instead
-                    # of raising on every micro-batch forever (repartition
-                    # an existing table with an offline rewrite, not
-                    # mid-stream)
-                    existing = silver.read_manifest(f"{out_dir}/{name}")
-                    if existing is not None and existing.get("partition_col") is None:
-                        part = None
-                if part is not None:
-                    entity = entity.withColumn(part[0], part[1]())
-                silver.merge_batch(
-                    spark,
-                    f"{out_dir}/{name}",
-                    entity,
-                    key,
-                    "version",
-                    keep=keep,
-                    batch_id=batch_id,
-                    n_buckets=n_buckets,
-                    partition_col=None if part is None else part[0],
-                )
+            ingest_batch(spark, prepared, out_dir, batch_id, n_buckets)
         finally:
             prepared.unpersist()
 

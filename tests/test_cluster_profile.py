@@ -6,7 +6,13 @@ results. session.get_spark_cluster documents/wires the full profile."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
 from pathlib import Path
+
+import pytest
 
 
 def _reset_checkpoint_dir(spark):
@@ -84,3 +90,55 @@ def test_get_spark_cluster_profile_shape():
     ):
         assert key in src
     assert ".master(" not in src
+
+
+def _shm_gate_holds() -> bool:
+    """session.get_spark's /dev/shm scratch gate: writable, ≥ 8 GiB free."""
+    if not os.access("/dev/shm", os.W_OK):
+        return False
+    st = os.statvfs("/dev/shm")
+    return st.f_bavail * st.f_frsize >= 8 * 1024**3
+
+
+# the child leaves a shuffle job running on a daemon thread, so the exit
+# handler meets a SparkContext that is still writing shuffle files
+_SHM_CHILD = """
+import json, os, sys, threading, time
+from django_indexer_spark.session import get_spark
+spark = get_spark("shm-exit")
+local = spark.sparkContext.getConf().get("spark.local.dir")
+df = spark.range(200000).selectExpr("id % 97 AS k", "id AS v")
+df.groupBy("k").count().collect()
+files = sum(len(fs) for _, _, fs in os.walk(local))
+job = df.repartition(8, "v").groupBy("k").count().crossJoin(spark.range(2000)).count
+threading.Thread(target=job, daemon=True).start()
+time.sleep(1.0)
+print(json.dumps({"pid": os.getpid(), "local": local, "files": files}))
+sys.stdout.flush()
+"""
+
+
+@pytest.mark.skipif(not _shm_gate_holds(), reason="/dev/shm scratch gate (8 GiB free) not met")
+def test_shm_scratch_removed_at_exit():
+    """The per-PID /dev/shm shuffle scratch is gone once the interpreter
+    has exited, even with a job in flight: the exit handler stops the
+    SparkContext before removing the directory."""
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_LOCAL_DIRS", "SPARK_GRAFT_LOCAL_DIR", "SPARK_GRAFT_MASTER")
+    }
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _SHM_CHILD],
+        cwd=Path(__file__).resolve().parent.parent,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    rec = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert rec["local"] == f"/dev/shm/spark_graft_local/{rec['pid']}"
+    assert rec["files"] > 0, "the shuffle wrote nothing under the scratch dir"
+    assert not os.path.exists(rec["local"])

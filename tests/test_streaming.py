@@ -16,11 +16,12 @@ import base64
 import glob
 import json
 import os
+import threading
 
 import pytest
 
 from django_indexer_spark.sources import silver
-from django_indexer_spark.streaming.pipeline import stream_ingest
+from django_indexer_spark.streaming.pipeline import ENTITY_PIPELINES, stream_ingest
 
 
 def read_silver(spark, out: str, name: str):
@@ -274,16 +275,27 @@ def test_silver_stale_replay_cannot_regress_state(spark, tmp_path):
     assert [(r["k"], r["v"], r["version"]) for r in out] == [("a", "new", 9)]
 
 
-def test_multi_queue_isolation_scheduler_pools(spark, tmp_path):
+def test_multi_queue_isolation_scheduler_pools(spark, tmp_path, monkeypatch):
     """T7: two concurrent streaming queries in SEPARATE FAIR-scheduler
     pools (the reference's per-queue Celery workers, base/celery.py) —
     both run simultaneously, both checkpoints advance, and re-running one
-    stream leaves the other's tables untouched."""
+    stream leaves the other's tables untouched. Every entity merge, on
+    whichever pool thread ingest_batch runs it, sees its query's pool."""
     dirs = {}
     for q in ("live", "backfill"):
         for kind in ("lake", "out", "ckpt"):
             dirs[q, kind] = str(tmp_path / q / kind)
         os.makedirs(dirs[q, "lake"])
+
+    seen: list[tuple[str, str | None]] = []  # (table_dir, pool) per merge
+    real_merge = silver.merge_batch
+
+    def recording_merge(spark_, table_dir, *args, **kwargs):
+        pool = spark_.sparkContext.getLocalProperty("spark.scheduler.pool")
+        seen.append((table_dir, pool))
+        return real_merge(spark_, table_dir, *args, **kwargs)
+
+    monkeypatch.setattr(silver, "merge_batch", recording_merge)
 
     write_block(dirs["live", "lake"], 100, [donation(1, "alice.near", "100")])
     write_block(dirs["backfill", "lake"], 500, [donation(71, "zoe.near", "9")])
@@ -319,6 +331,74 @@ def test_multi_queue_isolation_scheduler_pools(spark, tmp_path):
     live2 = {r["on_chain_id"] for r in read_silver(spark, dirs["live", "out"], "donations").collect()}
     assert live2 == {1, 2}
     assert silver.read_manifest(os.path.join(dirs["backfill", "out"], "donations")) == back_manifest
+
+    # pool propagation into ingest_batch's worker threads: one merge per
+    # entity per batch (live ran two batches), each in its query's pool
+    pools = {"live": "ingest_live", "backfill": "ingest_backfill"}
+    for q, batches in (("live", 2), ("backfill", 1)):
+        mine = [pool for d, pool in seen if d.startswith(dirs[q, "out"] + os.sep)]
+        assert len(mine) == batches * len(ENTITY_PIPELINES), q
+        assert set(mine) == {pools[q]}, q
+
+
+def _store_rows(spark, out: str) -> dict[str, list[str]]:
+    """table -> sorted row reprs of every published entity table."""
+    return {
+        name: sorted(map(repr, silver.read_table(spark, f"{out}/{name}").collect()))
+        for name in ENTITY_PIPELINES
+        if silver.read_manifest(f"{out}/{name}") is not None
+    }
+
+
+def test_concurrent_merge_failure_fails_batch_and_replay_is_idempotent(
+    spark, tmp_path, monkeypatch
+):
+    """One entity's merge raising fails the whole micro-batch only after
+    every concurrent merge has returned (no merge outlives the failed
+    batch), and replaying the batch from the same checkpoint converges to
+    the store a clean run writes — even though the other tables already
+    published the failed attempt."""
+    from pyspark.errors import StreamingQueryException
+
+    lake = str(tmp_path / "lake")
+    out, ckpt = str(tmp_path / "silver"), str(tmp_path / "ckpt")
+    os.makedirs(lake)
+    write_block(lake, 100, [donation(1, "alice.near", "100"), donation(2, "bob.near", "7")])
+    write_block(lake, 101, [donation(1, "alice.near", "150"), donation(3, "carol.near", "50")])
+
+    lock = threading.Lock()
+    state = {"running": 0, "failed": False}
+    real_merge = silver.merge_batch
+
+    def flaky_merge(spark_, table_dir, *args, **kwargs):
+        with lock:
+            state["running"] += 1
+            fail = table_dir.endswith(f"{os.sep}donations") and not state["failed"]
+            state["failed"] = state["failed"] or fail
+        try:
+            if fail:  # the first entity submitted: the rest are still running
+                raise RuntimeError("injected merge failure")
+            return real_merge(spark_, table_dir, *args, **kwargs)
+        finally:
+            with lock:
+                state["running"] -= 1
+
+    monkeypatch.setattr(silver, "merge_batch", flaky_merge)
+    q = stream_ingest(spark, lake, out, ckpt, available_now=True)
+    with pytest.raises(StreamingQueryException, match="injected merge failure"):
+        q.awaitTermination(120)
+    with lock:
+        assert state["failed"] and state["running"] == 0
+    assert silver.read_manifest(f"{out}/donations") is None  # never published
+    assert silver.read_manifest(f"{out}/accounts") is not None  # others did
+    monkeypatch.undo()
+
+    drain(spark, lake, out, ckpt)  # replay batch 0 on the same checkpoint
+    clean = str(tmp_path / "clean")
+    drain(spark, lake, clean, str(tmp_path / "clean_ckpt"))
+    replayed, expected = _store_rows(spark, out), _store_rows(spark, clean)
+    assert "donations" in expected and len(expected["donations"]) == 3
+    assert replayed == expected
 
 
 # ---------------------------------------------------------------------------
