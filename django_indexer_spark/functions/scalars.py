@@ -75,20 +75,6 @@ def is_digits(col: Column | str) -> Column:
     return (F.col(col) if isinstance(col, str) else col).rlike(DIGITS_RE)
 
 
-# -- C12: 2-decimal formatting at the serving edge (base/serializers.py:4-9)
-
-
-def format_2dp(col: Column | str) -> Column:
-    return F.format_number(F.col(col) if isinstance(col, str) else col, 2)
-
-
-# -- C13: decoded SuccessValue == "null" literal guard (handler.py:298-302)
-
-
-def non_null_literal(col: Column) -> Column:
-    return col.isNotNull() & (col != F.lit("null"))
-
-
 # -- C14/C15: enum-dict unwrap for nadabot group rules (utils.py:1164-1181):
 #    payload is either "Highest" (plain enum) or {"IncreasingReturns": 10}
 #    (enum with value). Emit two columns: rule_type, rule_val.
@@ -104,14 +90,6 @@ def rule_val(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     vals = F.map_values(F.from_json(c, "map<string,int>"))
     return F.when(c.startswith("{"), vals.getItem(0)).otherwise(F.lit(None).cast("int"))
-
-
-# -- C16: JSON string array → exploded rows (admins/accounts/providers,
-#         utils.py:71-74,199-203,813-815,1184-1189)
-
-
-def json_string_array(col: Column | str) -> Column:
-    return F.from_json(F.col(col) if isinstance(col, str) else col, "array<string>")
 
 
 # -- C17: fallback/coalesce chains (utils.py:130-133,917,886-888,645)

@@ -13,7 +13,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.amounts import guarded_amount
 from ..iterative import cut_lineage
 
 
@@ -26,16 +25,6 @@ def conditional_sum(flag: Column, value: Column, alias: str) -> Column:
 
 def conditional_count(flag: Column, alias: str) -> Column:
     return F.count(F.when(flag, F.lit(1))).alias(alias)
-
-
-def guarded_amount_sum(col: str, alias: str) -> Column:
-    """A6 — digit-guarded sum of u128 string amounts (tasks.py:200-204)."""
-    return F.sum(guarded_amount(col)).alias(alias)
-
-
-def distinct_count(df: DataFrame, col: str) -> DataFrame:
-    """A3 exact — countDistinct (base/api.py:74-79, tasks.py:285-287)."""
-    return df.agg(F.countDistinct(col).alias(f"distinct_{col}"))
 
 
 def approx_distinct_count(df: DataFrame, col: str, rsd: float = 0.02) -> DataFrame:

@@ -46,12 +46,6 @@ DONATE_CONTRACT = f"donate.{POTLOCK_TLA}"
 LISTS_CONTRACT = f"lists.{POTLOCK_TLA}"
 SOCIAL_CONTRACT = "social.near"
 
-# single source of truth lives in operators.filters (F9/C10), which mirrors
-# pots/utils.py:5-22 (subaccount incl. '-') and nadabot/utils.py:5-16
-POT_PATTERN = POT_RE
-FACTORY_PATTERN = POT_FACTORY_RE
-REGISTRY_PATTERN = NADABOT_RE
-
 DONATE_METHODS = (
     "donate",
     "handle_protocol_fee_callback",
@@ -159,7 +153,7 @@ def prepare(bronze: DataFrame) -> DataFrame:
     )
 
 
-def donations(prepared: DataFrame, donate_contract: str = DONATE_CONTRACT) -> DataFrame:
+def donations(prepared: DataFrame) -> DataFrame:
     """handle_new_donation (utils.py:863-1016) as one transform.
 
     Route: method in DONATE_METHODS with a non-null, non-"null" result
@@ -191,7 +185,7 @@ def donations(prepared: DataFrame, donate_contract: str = DONATE_CONTRACT) -> Da
         - F.coalesce(guarded_amount(d["referrer_fee"]), F.lit(0).cast("decimal(38,0)"))
         - F.coalesce(guarded_amount(d["chef_fee"]), F.lit(0).cast("decimal(38,0)"))
     ).cast("string")
-    is_pot = F.col("receiver_id") != donate_contract
+    is_pot = F.col("receiver_id") != DONATE_CONTRACT
     return (
         prepared.filter(F.col("method_name").isin(*DONATE_METHODS))
         .filter(F.col("success_json").isNotNull())
@@ -342,11 +336,7 @@ def chains(prepared: DataFrame) -> DataFrame:
     )
 
 
-def non_donation_activities(
-    prepared: DataFrame,
-    lists_contract: str = LISTS_CONTRACT,
-    pot_pattern: str = POT_PATTERN,
-) -> DataFrame:
+def non_donation_activities(prepared: DataFrame) -> DataFrame:
     """Activity rows from the six non-donation handler sites — the rest of
     the reference's ActivityType surface (activities/models.py:7-19).
     Each emitter mirrors its handler's routing filter and writes the same
@@ -387,8 +377,8 @@ def non_donation_activities(
             F.col("version"),
         )
 
-    on_pot = F.col("receiver_id").rlike(pot_pattern)
-    on_lists = F.col("receiver_id") == lists_contract
+    on_pot = F.col("receiver_id").rlike(POT_RE)
+    on_lists = F.col("receiver_id") == LISTS_CONTRACT
     deploy = row(
         prepared.filter((F.col("method_name") == "new") & on_pot),
         F.col("args_json"),
@@ -445,7 +435,7 @@ def non_donation_activities(
     )
 
 
-def list_registrations(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> DataFrame:
+def list_registrations(prepared: DataFrame) -> DataFrame:
     """handle_new_list_registration (utils.py:377-446): register_batch on
     the lists contract; payload = decoded SuccessValue ARRAY of
     registrations → explode. First-writer-wins on (list_id, registrant_id)
@@ -453,7 +443,7 @@ def list_registrations(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT
     return (
         prepared.filter(
             (F.col("method_name") == "register_batch")
-            & (F.col("receiver_id") == lists_contract)
+            & (F.col("receiver_id") == LISTS_CONTRACT)
             & F.col("success_json").isNotNull()
         )
         .withColumn("reg", F.explode(F.from_json("success_json", REGISTRATION_SCHEMA)))
@@ -474,7 +464,7 @@ def list_registrations(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT
     )
 
 
-def pot_applications(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
+def pot_applications(prepared: DataFrame) -> DataFrame:
     """handle_pot_application (utils.py:474-546): apply /
     assert_can_apply_callback on a pot account; payload = SuccessValue;
     natural key (pot_id, applicant_id) (pots/models.py:452-455),
@@ -482,7 +472,7 @@ def pot_applications(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> Dat
     return (
         prepared.filter(
             F.col("method_name").isin("apply", "assert_can_apply_callback")
-            & F.col("receiver_id").rlike(pot_pattern)
+            & F.col("receiver_id").rlike(POT_RE)
             & F.col("success_json").isNotNull()
         )
         .withColumn("appl", F.from_json("success_json", APPLICATION_SCHEMA))
@@ -501,13 +491,13 @@ def pot_applications(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> Dat
     )
 
 
-def list_upvotes(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> DataFrame:
+def list_upvotes(prepared: DataFrame) -> DataFrame:
     """handle_list_upvote (utils.py:631-664): upvote on the lists contract;
     args carry {list_id}; the account is the signer; unique (list, account)
     (lists/models.py:86-115)."""
     return (
         prepared.filter(
-            (F.col("method_name") == "upvote") & (F.col("receiver_id") == lists_contract)
+            (F.col("method_name") == "upvote") & (F.col("receiver_id") == LISTS_CONTRACT)
         )
         .select(
             F.get_json_object("args_json", "$.list_id").cast("long").alias("list_id"),
@@ -519,7 +509,7 @@ def list_upvotes(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> D
     )
 
 
-def new_lists(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> DataFrame:
+def new_lists(prepared: DataFrame) -> DataFrame:
     """handle_new_list (utils.py:333-374): create_list on the lists
     contract; payload = SuccessValue List object; ms → timestamps;
     admins as an array column (§1.3 choice)."""
@@ -527,7 +517,7 @@ def new_lists(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> Data
     return (
         prepared.filter(
             (F.col("method_name") == "create_list")
-            & (F.col("receiver_id") == lists_contract)
+            & (F.col("receiver_id") == LISTS_CONTRACT)
             & F.col("success_json").isNotNull()
         )
         .withColumn("lst", F.from_json("success_json", LIST_SCHEMA))
@@ -667,7 +657,7 @@ def _jarr(path: str) -> F.Column:
     return F.from_json(_j(path), "array<string>")
 
 
-def new_pots(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
+def new_pots(prepared: DataFrame) -> DataFrame:
     """handle_new_pot (utils.py:117-216; route handler.py:204,216-227:
     'new' on a pot subaccount). Key fields of the deployment config;
     owner falls back to signer (the contract's own rule, utils.py:130-133,
@@ -675,7 +665,7 @@ def new_pots(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
     zero and are owned by the gold jobs. First writer wins — the
     reference skips creation when the pot exists (utils.py:138-143)."""
     return (
-        prepared.filter((F.col("method_name") == "new") & F.col("receiver_id").rlike(pot_pattern))
+        prepared.filter((F.col("method_name") == "new") & F.col("receiver_id").rlike(POT_RE))
         .select(
             F.col("receiver_id").alias("id"),
             F.col("predecessor_id").alias("pot_factory_id"),
@@ -714,13 +704,13 @@ def new_pots(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
     )
 
 
-def new_pot_factories(prepared: DataFrame, factory_pattern: str = FACTORY_PATTERN) -> DataFrame:
+def new_pot_factories(prepared: DataFrame) -> DataFrame:
     """handle_new_pot_factory (utils.py:285-331; route handler.py:205-209:
     'new' on the bare factory account). Last writer wins
     (aupdate_or_create, utils.py:313-315)."""
     return (
         prepared.filter(
-            (F.col("method_name") == "new") & F.col("receiver_id").rlike(factory_pattern)
+            (F.col("method_name") == "new") & F.col("receiver_id").rlike(POT_FACTORY_RE)
         )
         .select(
             F.col("receiver_id").alias("id"),
@@ -737,12 +727,12 @@ def new_pot_factories(prepared: DataFrame, factory_pattern: str = FACTORY_PATTER
     )
 
 
-def new_nadabot_registries(prepared: DataFrame, registry_pattern: str = REGISTRY_PATTERN) -> DataFrame:
+def new_nadabot_registries(prepared: DataFrame) -> DataFrame:
     """handle_new_nadabot_registry (utils.py:55-76; route handler.py:
     210-215). Last writer wins (aupdate_or_create)."""
     return (
         prepared.filter(
-            (F.col("method_name") == "new") & F.col("receiver_id").rlike(registry_pattern)
+            (F.col("method_name") == "new") & F.col("receiver_id").rlike(NADABOT_RE)
         )
         .select(
             F.col("receiver_id").alias("id"),
@@ -780,7 +770,7 @@ def deployment_accounts(prepared: DataFrame) -> DataFrame:
     return out.filter(F.col("id").isNotNull()).distinct()
 
 
-def pot_payouts(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
+def pot_payouts(prepared: DataFrame) -> DataFrame:
     """handle_set_payouts + handle_transfer_payout as one frame
     (utils.py:667-733, routes handler.py:362-365,389-395).
 
@@ -792,7 +782,7 @@ def pot_payouts(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFram
     key: (pot_id, recipient_id), last writer wins, so a fulfillment row
     supersedes its pending row in the merge.
     """
-    base = prepared.filter(F.col("receiver_id").rlike(pot_pattern))
+    base = prepared.filter(F.col("receiver_id").rlike(POT_RE))
     p = F.col("p")
     sets = (
         base.filter(F.col("method_name") == "chef_set_payouts")
@@ -831,12 +821,12 @@ def pot_payouts(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFram
     return sets.unionByName(transfers)
 
 
-def payout_challenges(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
+def payout_challenges(prepared: DataFrame) -> DataFrame:
     """handle_payout_challenge (utils.py:735-761, route handler.py:367):
     challenger = signer, message = args.reason; natural key
     (challenger, pot) with last writer winning (aupdate_or_create)."""
     return (
-        prepared.filter(F.col("receiver_id").rlike(pot_pattern))
+        prepared.filter(F.col("receiver_id").rlike(POT_RE))
         .filter(F.col("method_name") == "challenge_payouts")
         .select(
             F.col("signer_id").alias("challenger_id"),
@@ -849,12 +839,12 @@ def payout_challenges(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> Da
     )
 
 
-def challenge_responses(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
+def challenge_responses(prepared: DataFrame) -> DataFrame:
     """handle_payout_challenge_response (utils.py:764-782, route
     handler.py:378): admin = signer; key (challenger, pot, created_at)
     (pots/models.py:692-695), last writer wins."""
     return (
-        prepared.filter(F.col("receiver_id").rlike(pot_pattern))
+        prepared.filter(F.col("receiver_id").rlike(POT_RE))
         .filter(F.col("method_name") == "admin_update_payouts_challenge")
         .select(
             F.get_json_object("args_json", "$.challenger_id").alias("challenger_id"),
@@ -871,7 +861,7 @@ def challenge_responses(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> 
     )
 
 
-def application_reviews(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> DataFrame:
+def application_reviews(prepared: DataFrame) -> DataFrame:
     """handle_pot_application_status_change (utils.py:542-595, route
     handler.py:333-341): review payload is the decoded SuccessValue,
     applicant from args.project_id, reviewer = signer; key
@@ -882,7 +872,7 @@ def application_reviews(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> 
     reaches the same final state replay-safely."""
     u = F.from_json("success_json", APP_STATUS_SCHEMA)
     return (
-        prepared.filter(F.col("receiver_id").rlike(pot_pattern))
+        prepared.filter(F.col("receiver_id").rlike(POT_RE))
         .filter(F.col("method_name") == "chef_set_application_status")
         .filter(F.col("success_json").isNotNull())
         .withColumn("u", u)
@@ -900,7 +890,7 @@ def application_reviews(prepared: DataFrame, pot_pattern: str = POT_PATTERN) -> 
     )
 
 
-def registration_updates(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> DataFrame:
+def registration_updates(prepared: DataFrame) -> DataFrame:
     """handle_list_registration_update (utils.py:449-471, route
     handler.py:351-361): update payload is the decoded SuccessValue,
     keyed on the registration's on-chain id; last writer wins. Gold
@@ -908,7 +898,7 @@ def registration_updates(prepared: DataFrame, lists_contract: str = LISTS_CONTRA
     note as application_reviews)."""
     u = F.from_json("success_json", REG_UPDATE_SCHEMA)
     return (
-        prepared.filter(F.col("receiver_id") == lists_contract)
+        prepared.filter(F.col("receiver_id") == LISTS_CONTRACT)
         .filter(F.col("method_name") == "update_registration")
         .filter(F.col("success_json").isNotNull())
         .withColumn("u", u)
@@ -923,7 +913,7 @@ def registration_updates(prepared: DataFrame, lists_contract: str = LISTS_CONTRA
     )
 
 
-def social_profile_updates(prepared: DataFrame, social_contract: str = SOCIAL_CONTRACT) -> DataFrame:
+def social_profile_updates(prepared: DataFrame) -> DataFrame:
     """handle_social_profile_update (utils.py:36-52): 'set' on the social
     contract where args.data[<signer>].profile exists. Emits the signer ids
     whose profile changed; the gold job joins them against existing
@@ -936,7 +926,7 @@ def social_profile_updates(prepared: DataFrame, social_contract: str = SOCIAL_CO
     )
     return (
         prepared.filter(
-            (F.col("method_name") == "set") & (F.col("receiver_id") == social_contract)
+            (F.col("method_name") == "set") & (F.col("receiver_id") == SOCIAL_CONTRACT)
         )
         .withColumn("profile_json", profile)
         .filter(F.col("profile_json").isNotNull())
@@ -1049,7 +1039,7 @@ FACTORY_CONFIG_METHODS = (
 )
 
 
-def list_updates(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> DataFrame:
+def list_updates(prepared: DataFrame) -> DataFrame:
     """handle_default_list_status_change (utils.py:598-629, route
     handler.py:342-350): list field updates from the decoded SuccessValue,
     keyed on args.registration_id (which the handler uses as the LIST id);
@@ -1058,7 +1048,7 @@ def list_updates(prepared: DataFrame, lists_contract: str = LISTS_CONTRACT) -> D
     applied by domain.current_lists' coalesce."""
     u = F.from_json("success_json", LIST_UPDATE_SCHEMA)
     return (
-        prepared.filter(F.col("receiver_id") == lists_contract)
+        prepared.filter(F.col("receiver_id") == LISTS_CONTRACT)
         .filter(F.col("method_name") == "admin_set_default_project_status")
         .filter(F.col("success_json").isNotNull())
         .withColumn("u", u)
@@ -1108,7 +1098,7 @@ def admin_ops(prepared: DataFrame) -> DataFrame:
     reg_add = (
         prepared.filter(
             (F.col("method_name") == "owner_add_admins")
-            & F.col("receiver_id").rlike(REGISTRY_PATTERN)
+            & F.col("receiver_id").rlike(NADABOT_RE)
         )
         .select(
             F.lit("registry").alias("entity_type"),
@@ -1122,14 +1112,14 @@ def admin_ops(prepared: DataFrame) -> DataFrame:
     return lists_rm.unionByName(reg_add)
 
 
-def factory_config_events(prepared: DataFrame, factory_pattern: str = FACTORY_PATTERN) -> DataFrame:
+def factory_config_events(prepared: DataFrame) -> DataFrame:
     """handle_set_factory_configs (utils.py:831-840, route handler.py:
     428-443): any factory admin/config method marks the factory for an
     RPC config refresh (S4). Raw args kept for the enrichment join."""
     return (
         prepared.filter(
             F.col("method_name").isin(*FACTORY_CONFIG_METHODS)
-            & F.col("receiver_id").rlike(factory_pattern)
+            & F.col("receiver_id").rlike(POT_FACTORY_RE)
         )
         .select(
             F.col("receiver_id").alias("factory_id"),

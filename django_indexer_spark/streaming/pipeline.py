@@ -1,21 +1,19 @@
 """Ingest pipeline assembly — batch core + Structured Streaming wrapper
 (SURVEY.md §2.9 T1-T8, §7 phase 6).
 
-Two entry points share ``ENTITY_PIPELINES`` (entity -> normalizer,
-natural key, conflict policy), the single definition of what the
-reference's three execution modes write:
+``ENTITY_PIPELINES`` (entity -> normalizer, natural key, conflict
+policy) is the single definition of what the reference's three
+execution modes write:
 
   - live stream  (runindexer → asyncio loop, tasks.py:28-93)
   - spot replay  (runspotindexer over a height range, tasks.py:114-126)
   - backfill     (populatedata.py contract scans)
 
-``stream_ingest`` is the production path for all three: a file-source
-stream over the lake (``available_now=True`` drains a fixed range, the
+One path serves all three: ``stream_ingest`` is a file-source stream
+over the lake (``available_now=True`` drains a fixed range, the
 replay/backfill shape) whose ``foreachBatch`` hands each micro-batch to
 ``ingest_batch``, which merges every entity into its bucketed silver
 table with ``sources.silver.merge_batch``.
-``run_batch`` is a separate in-memory upsert of the same normalizers
-over frames, with no silver store; streaming does not call it.
 
 Delivery is at-least-once (checkpointLocation tracks progress, T2 —
 replacing the reference's BlockHeight singleton, utils.py:1194-1203);
@@ -48,7 +46,6 @@ from pyspark.util import inheritable_thread_target
 
 from ..sources import normalize, silver
 from ..sources.lake import explode_receipts, read_lake_stream
-from ..sources.merge import upsert
 
 
 def _accounts(prepared: DataFrame) -> DataFrame:
@@ -192,20 +189,6 @@ ENTITY_PIPELINES: dict[str, tuple[Callable[[DataFrame], DataFrame], list[str], s
 }
 
 
-def run_batch(
-    bronze: DataFrame, existing: dict[str, DataFrame] | None = None
-) -> dict[str, DataFrame]:
-    """Normalize one bronze batch and merge into the existing silver tables
-    (None → bootstrap). Returns the updated silver frames."""
-    existing = existing or {}
-    prepared = normalize.prepare(bronze)
-    out: dict[str, DataFrame] = {}
-    for name, (fn, key, keep) in ENTITY_PIPELINES.items():
-        incoming = fn(prepared)
-        out[name] = upsert(existing.get(name), incoming, key, "version", keep=keep)
-    return out
-
-
 def ingest_batch(
     spark: SparkSession,
     prepared: DataFrame,
@@ -234,16 +217,6 @@ def ingest_batch(
     def merge(name: str, fn: Callable[[DataFrame], DataFrame], key: list[str], keep: str) -> None:
         entity = fn(prepared)
         part = ENTITY_PARTITIONS.get(name)
-        if part is not None:
-            # upgrade path: a table created before its entity gained a
-            # partition column has partition_col=None in its manifest,
-            # and merge_batch treats partitioning as fixed at creation —
-            # adopt the TABLE's layout instead of raising on every
-            # micro-batch forever (repartition an existing table with an
-            # offline rewrite, not mid-stream)
-            existing = silver.read_manifest(f"{out_dir}/{name}")
-            if existing is not None and existing.get("partition_col") is None:
-                part = None
         if part is not None:
             entity = entity.withColumn(part[0], part[1]())
         silver.merge_batch(

@@ -35,7 +35,7 @@ def windowed_counts(
     Returns window_start/window_end + group cols + aggregates (default:
     row count). Works identically on a batch DataFrame (watermark is a
     no-op there) — one definition serves both the streaming gold job and
-    its batch backfill, the same single-code-path rule as run_batch.
+    its batch backfill, the one-path rule the ingest pipeline follows.
     """
     aggs = aggs or [F.count(F.lit(1)).alias("n_events")]
     agged = (

@@ -1,8 +1,9 @@
 """Bronze → silver → gold, end to end (SURVEY.md §3 lifecycle).
 
 One synthetic block batch flows through the full medallion: lake-shaped
-bronze rows → run_batch (normalize + versioned merge across all 24
-entity pipelines) → domain gold plans (/stats, account stats, USD
+bronze rows → ingest_batch (normalize + versioned merge of all 28
+entity pipelines into a bucketed silver store, read back with
+silver.read_table) → domain gold plans (/stats, account stats, USD
 pricing with the as-of join). Asserts cross-layer consistency: gold
 numbers equal hand-computed truth from the raw events.
 """
@@ -12,8 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from django_indexer_spark.plans import domain
-from django_indexer_spark.streaming.pipeline import run_batch
-from tests.test_ingest import DONATION, bronze_row, make_bronze
+from tests.test_ingest import bronze_row, ingest, make_bronze
 
 
 def donation(oid, donor, amount, recipient="charity.near", ms=1_700_000_000_000):
@@ -27,7 +27,7 @@ def donation(oid, donor, amount, recipient="charity.near", ms=1_700_000_000_000)
     }
 
 
-def test_bronze_to_gold_consistency(spark):
+def test_bronze_to_gold_consistency(spark, tmp_path):
     bronze = make_bronze(
         spark,
         [
@@ -38,7 +38,7 @@ def test_bronze_to_gold_consistency(spark):
             bronze_row(receipt_id="d3", success=donation(3, "bob.near", "500"), height=101),
         ],
     )
-    silver = run_batch(bronze)
+    silver = ingest(spark, bronze, tmp_path, 0)
     # domain plans run against the entity schema, whose surrogate id is
     # the F11 dedup key in the silver layer
     donations = silver["donations"].withColumn("id", F.col("dedup_key"))

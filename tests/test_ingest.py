@@ -10,9 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from django_indexer_spark.schemas import BLOCK_STREAM_SCHEMA, LAKE_MESSAGE_SCHEMA
-from django_indexer_spark.sources import normalize
+from django_indexer_spark.sources import normalize, silver
 from django_indexer_spark.sources.lake import explode_receipts, last_processed_height
-from django_indexer_spark.streaming.pipeline import run_batch
+from django_indexer_spark.streaming.pipeline import ENTITY_PIPELINES, ingest_batch
 
 
 def b64(obj) -> str:
@@ -67,6 +67,20 @@ def make_bronze(spark, rows_):
         " success_value_b64 string, method_name string, args_b64 string, logs array<string>"
     )
     return spark.createDataFrame(rows_, schema)
+
+
+def ingest(spark, bronze, store, batch_id):
+    """Merge one bronze batch into the silver store at ``store`` through
+    the production path and return ``{entity: DataFrame}`` for every
+    published table. The frames read the current snapshot lazily: collect
+    them before the next batch supersedes their bucket versions."""
+    prepared = normalize.prepare(bronze).persist()
+    try:
+        ingest_batch(spark, prepared, str(store), batch_id)
+    finally:
+        prepared.unpersist()
+    tables = {name: silver.read_table(spark, f"{store}/{name}") for name in ENTITY_PIPELINES}
+    return {name: df for name, df in tables.items() if df is not None}
 
 
 DONATION = {
@@ -154,7 +168,7 @@ def test_accounts_cascade_and_activities(spark):
     assert len(acts) == 1 and acts[0]["type"] == "Donate_Direct"
 
 
-def test_replay_idempotence(spark):
+def test_replay_idempotence(spark, tmp_path):
     """Golden invariant: ingesting the stream twice ≡ once (T3)."""
     base = [
         bronze_row(receipt_id="r1", success=DONATION),
@@ -172,16 +186,21 @@ def test_replay_idempotence(spark):
             ordinal=1,
         ),
     ]
-    once = run_batch(make_bronze(spark, base))
+    once = {
+        name: sorted(map(str, df.collect()))
+        for name, df in ingest(spark, make_bronze(spark, base), tmp_path, 0).items()
+    }
+    # the replay carries every row twice, into the store that holds them
     twice_bronze = make_bronze(spark, base + base)
-    twice = run_batch(twice_bronze)
+    twice = ingest(spark, twice_bronze, tmp_path, 1)
+    assert set(twice) == set(once)
     for name in once:
-        a = sorted(map(str, once[name].collect()))
+        a = once[name]
         b = sorted(map(str, twice[name].collect()))
         assert a == b, f"{name} not replay-idempotent"
 
 
-def test_conflict_policies_last_vs_first(spark):
+def test_conflict_policies_last_vs_first(spark, tmp_path):
     v1 = dict(DONATION, message="v1")
     v2 = dict(DONATION, message="v2")
     reg = {
@@ -204,7 +223,7 @@ def test_conflict_policies_last_vs_first(spark):
             ),
         ],
     )
-    out = run_batch(bronze)
+    out = ingest(spark, bronze, tmp_path, 0)
     donation = out["donations"].collect()
     assert len(donation) == 1 and donation[0]["message"] == "v2"  # LWW (utils.py:978)
     regs = out["list_registrations"].collect()
@@ -433,9 +452,7 @@ def test_application_review_and_registration_update(spark):
     assert len(ru) == 1 and ru[0]["registration_id"] == 44
 
 
-def test_run_batch_covers_all_entities(spark):
-    from django_indexer_spark.streaming.pipeline import ENTITY_PIPELINES, run_batch
-
+def test_ingest_batch_covers_all_entities(spark, tmp_path):
     pot = "grants.v1.potfactory.potlock.near"
     bronze = make_bronze(
         spark,
@@ -456,15 +473,25 @@ def test_run_batch_covers_all_entities(spark):
             ),
         ],
     )
-    out = run_batch(bronze)
-    assert set(out) == set(ENTITY_PIPELINES)
+    prepared = normalize.prepare(bronze)
+    has_rows = {n for n, (fn, _, _) in ENTITY_PIPELINES.items() if not fn(prepared).isEmpty()}
+    out = ingest(spark, bronze, tmp_path, 0)
+    # every pipeline ran: a table exists exactly for the entities with rows
+    # in the batch, and the rest wrote nothing, not even a table directory
+    assert set(out) == has_rows
+    assert {"donations", "pot_payouts", "nadabot_stamps"} <= has_rows
+    no_rows = set(ENTITY_PIPELINES) - has_rows
+    assert no_rows
+    assert not [n for n in no_rows if (tmp_path / n).exists()]
     assert out["donations"].count() == 1
     assert out["pot_payouts"].count() == 1
     assert out["nadabot_stamps"].count() == 1
-    # running the same batch twice is a no-op (T3 idempotence)
-    again = run_batch(bronze, out)
-    for name, df in again.items():
-        assert df.count() == out[name].count(), name
+    assert silver.read_manifest(f"{tmp_path}/donations").get("partition_col") == "donated_date"
+    # replaying the same batch under a new batch id is a no-op (T3
+    # idempotence): every table keeps the same rows, row for row
+    rows = {name: sorted(map(repr, df.collect())) for name, df in out.items()}
+    again = ingest(spark, bronze, tmp_path, 1)
+    assert {name: sorted(map(repr, df.collect())) for name, df in again.items()} == rows
 
 
 def test_deployment_normalizers_route_and_cascade(spark):
@@ -757,7 +784,7 @@ def test_account_patterns_match_reference_matchers():
     assert not re.match(NADABOT_RE, "v1.app2.nadabot.near")  # digits rejected
 
 
-def test_non_donation_activities_all_types(spark):
+def test_non_donation_activities_all_types(spark, tmp_path):
     """Every non-donation handler site emits its Activity row
     (utils.py:212,442,531,656,757,801) with the handler's payload as
     action_result; Remove_List_Admin carries none (keyed on type alone)."""
@@ -824,23 +851,21 @@ def test_non_donation_activities_all_types(spark):
     # through the silver merge: (action_result, type) key collapses the two
     # Remove_List_Admin rows to one, last writer wins — the reference's
     # aupdate_or_create(type=...) quirk (utils.py:801)
-    out = run_batch(bronze)
-    silver = out["activities"].collect()
-    rm = [r for r in silver if r["type"] == "Remove_List_Admin"]
+    out = ingest(spark, bronze, tmp_path, 0)
+    merged = out["activities"].collect()
+    rm = [r for r in merged if r["type"] == "Remove_List_Admin"]
     assert len(rm) == 1 and rm[0]["tx_hash"] == "ra2"
-    assert {r["type"] for r in silver} >= {
+    assert {r["type"] for r in merged} >= {
         "Deploy_Pot", "Register_Batch", "Submit_Application",
         "Upvote", "Challenge_Payout", "Remove_List_Admin",
     }
 
 
-def test_tokens_prices_chains_pipelines_and_enrich_merge(spark):
+def test_tokens_prices_chains_pipelines_and_enrich_merge(spark, tmp_path):
     """tokens / token_prices / chains ride the same silver machinery
     (judge r2 items 5 and 9): bronze emits version-0 skeletons, the
     out-of-engine enrich merge (version = fetch-time ns) wins last-writer,
     and a bronze replay AFTER enrichment never clobbers fetched values."""
-    from django_indexer_spark.sources.merge import upsert
-
     ft = dict(DONATION)
     ft.update({"id": 11, "ft_id": "usdc.near"})
     bronze = make_bronze(
@@ -850,7 +875,7 @@ def test_tokens_prices_chains_pipelines_and_enrich_merge(spark):
             bronze_row(receipt_id="d2", success=ft, ordinal=1),   # ft token
         ],
     )
-    out = run_batch(bronze)
+    out = ingest(spark, bronze, tmp_path, 0)
     toks = {r["id"]: r for r in out["tokens"].collect()}
     assert set(toks) == {"near", "usdc.near"}
     assert all(r["decimals"] == 24 and r["name"] is None for r in toks.values())
@@ -862,7 +887,8 @@ def test_tokens_prices_chains_pipelines_and_enrich_merge(spark):
     assert len(chain) == 1 and chain[0]["name"] == "NEAR"
     assert chain[0]["evm_compat"] is False and chain[0]["evm_chain_id"] is None
 
-    # enrich merge: fetched metadata/price at version = fetch-time ns
+    # enrich merge into the same silver tables, as streaming.enrich does:
+    # fetched metadata/price at version = fetch-time ns
     fetch_ns = 1_700_000_000_000_000_000
     tok_fetched = spark.createDataFrame(
         [("usdc.near", "USD Coin", "USDC", None, 6, "usd-coin", fetch_ns)],
@@ -873,16 +899,19 @@ def test_tokens_prices_chains_pipelines_and_enrich_merge(spark):
         [("usdc.near", "14-11-2023", 1.0, fetch_ns)],
         "token_id string, date_key string, price_usd double, version long",
     )
-    enriched = dict(out)
-    enriched["tokens"] = upsert(out["tokens"], tok_fetched, ["id"], "version", keep="last")
-    enriched["token_prices"] = upsert(
-        out["token_prices"], price_fetched, ["token_id", "date_key"], "version", keep="last"
+    silver.merge_batch(
+        spark, f"{tmp_path}/tokens", tok_fetched, ["id"], "version", keep="last", batch_id=1
     )
-    usdc = [r for r in enriched["tokens"].collect() if r["id"] == "usdc.near"][0]
+    silver.merge_batch(
+        spark, f"{tmp_path}/token_prices", price_fetched, ["token_id", "date_key"], "version",
+        keep="last", batch_id=1,
+    )
+    enriched_tokens = silver.read_table(spark, f"{tmp_path}/tokens")
+    usdc = [r for r in enriched_tokens.collect() if r["id"] == "usdc.near"][0]
     assert (usdc["symbol"], usdc["decimals"]) == ("USDC", 6)
 
     # replaying the SAME bronze over the enriched tables is a no-op
-    again = run_batch(bronze, enriched)
+    again = ingest(spark, bronze, tmp_path, 2)
     usdc2 = [r for r in again["tokens"].collect() if r["id"] == "usdc.near"][0]
     assert (usdc2["symbol"], usdc2["decimals"]) == ("USDC", 6)
     p2 = {(r["token_id"], r["date_key"]): r["price_usd"] for r in again["token_prices"].collect()}

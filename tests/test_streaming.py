@@ -522,34 +522,6 @@ def test_silver_vacuum_removes_only_unreferenced_dirs(spark, tmp_path):
     assert silver.vacuum(d) == []
 
 
-def test_stream_ingest_adopts_legacy_unpartitioned_table(spark, tmp_path, monkeypatch):
-    """Upgrade path: a donations table created BEFORE date partitioning
-    (manifest partition_col=None) must keep ingesting after the code
-    starts requesting a partition column — the pipeline adopts the
-    table's fixed layout instead of raising in every micro-batch."""
-    from django_indexer_spark.streaming import pipeline as P
-
-    lake = str(tmp_path / "lake")
-    out = str(tmp_path / "silver")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(lake)
-
-    write_block(lake, 100, [donation(1, "alice.near", "100")])
-    # create the table with the legacy (no-partition) layout
-    monkeypatch.setattr(P, "ENTITY_PARTITIONS", {})
-    drain(spark, lake, out, ckpt)
-    from django_indexer_spark.sources import silver
-
-    assert silver.read_manifest(f"{out}/donations").get("partition_col") is None
-    monkeypatch.undo()  # new code wants donated_date again
-
-    write_block(lake, 101, [donation(2, "bob.near", "50")])
-    drain(spark, lake, out, ckpt)  # must NOT raise
-    rows = {r["on_chain_id"] for r in read_silver(spark, out, "donations").collect()}
-    assert rows == {1, 2}
-    assert silver.read_manifest(f"{out}/donations").get("partition_col") is None
-
-
 def test_watermarked_dedup_drops_redelivery_and_bounds_state(spark, tmp_path):
     """watermarked_exact_dedup contract, both halves:
     - a redelivered key arriving WITHIN the watermark delay of the
