@@ -761,42 +761,3 @@ def monotonic_violations(
             F.max("__reg").cast("long").alias("max_regression"),
         )
     )
-
-
-def erasure_manifest(
-    df: DataFrame,
-    subject_col: str,
-    subjects: DataFrame,
-    ts_col: str,
-) -> DataFrame:
-    """Right-to-erasure manifest: for each subject on the deletion
-    list, what the pipeline is about to remove — row count, the
-    affected time range, and the stable pseudonym that REPLACES the
-    key in retained aggregates (md5('anon:'||key): referential
-    integrity survives, identity doesn't). The compliance planning
-    half of a GDPR delete: the manifest is reviewed/logged, then the
-    actual rewrite is an anti-join (J7's shape) plus this pseudonym
-    projection.
-
-    One broadcast semi-join (the subject list is human-scale by
-    definition) + one grouped fold; nothing fact-sized survives."""
-    marked = df.join(
-        F.broadcast(subjects.select(F.col(subject_col))), subject_col
-    )
-    return (
-        marked.groupBy(subject_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.min(ts_col).cast("long").alias("first_ts"),
-            F.max(ts_col).cast("long").alias("last_ts"),
-        )
-        .select(
-            F.col(subject_col),
-            "n_rows",
-            "first_ts",
-            "last_ts",
-            F.md5(
-                F.concat(F.lit("anon:"), F.col(subject_col).cast("string"))
-            ).alias("pseudonym"),
-        )
-    )

@@ -544,33 +544,3 @@ LAKE_MESSAGE_SCHEMA = T.StructType(
         ),
     ]
 )
-
-# JSON-island partial schemas (SURVEY.md §1.2 JSONField row)
-# accounts/serializers.py:9-52 — near_social_profile_data documented shape
-PROFILE_DATA_SCHEMA = T.StructType(
-    [
-        T.StructField("name", _S),
-        T.StructField(
-            "image",
-            T.StructType(
-                [
-                    T.StructField("url", _S),
-                    T.StructField("ipfs_cid", _S),
-                    T.StructField(
-                        "nft",
-                        T.StructType(
-                            [
-                                T.StructField("media", _S),
-                                T.StructField("baseUri", _S),
-                                T.StructField("tokenId", _S),
-                                T.StructField("contractId", _S),
-                            ]
-                        ),
-                    ),
-                ]
-            ),
-        ),
-        T.StructField("linktree", T.MapType(_S, _S)),
-        T.StructField("plCategories", _S),  # JSON-stringified array (lists/api.py:157-161)
-    ]
-)

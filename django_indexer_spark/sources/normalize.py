@@ -275,11 +275,15 @@ def donation_activities(donation_rows: DataFrame) -> DataFrame:
 def tokens(donation_rows: DataFrame) -> DataFrame:
     """Token entity skeleton from the donation stream (utils.py:917-943):
     every donation's ft token (or 'near') is get_or_create'd with
-    decimals=24 and metadata left for the RPC fetch. The fetch is
-    out-of-engine (SURVEY §2.1); streaming.enrich merges its output into
-    THIS table with version = fetch-time ns, so under last-writer-wins
-    the skeleton (version 0, identical every replay) never clobbers
-    fetched metadata and replays are idempotent by construction."""
+    decimals=24 and metadata left for the RPC fetch, at version 0 and
+    identical every replay. The fetch is out-of-engine (SURVEY §2.1).
+
+    Nothing fills these skeletons (or ``token_price_requests``') today:
+    ``streaming.enrich.refresh_dimension`` cannot, for three reasons.
+    Its left-anti join against the table counts every skeleton key as
+    already present, so it fetches nothing for them. It stamps
+    ``version = batch_id``, not the fetch time in ns. Its
+    ``PRICE_DIM_SCHEMA`` is not the ``token_prices`` schema."""
     return (
         donation_rows.select(F.coalesce(F.col("token_id"), F.lit("near")).alias("id"))
         .distinct()
@@ -301,8 +305,8 @@ def token_price_requests(donation_rows: DataFrame) -> DataFrame:
     window and creating the row on miss via Coingecko's per-DATE history
     endpoint (format_date, base/utils.py:4-8) — so (token_id, date_key)
     is the natural key. Bronze emits the key with a NULL price at
-    version 0; the T5 repair loop re-picks NULL-USD rows and the enrich
-    merge (version = fetch-time ns) fills them, never the other way."""
+    version 0, for a price fetch that nothing runs against this table
+    today (see ``tokens``)."""
     return (
         donation_rows.select(
             F.coalesce(F.col("token_id"), F.lit("near")).alias("token_id"),

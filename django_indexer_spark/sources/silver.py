@@ -14,10 +14,13 @@ trigger O(batch size + touched buckets) and removes the truncation window:
   distinct-collect (at most ``n_buckets`` small values — same bounded-
   materialization pattern as the IVF centroids);
 - every rewrite lands in a NEW versioned directory
-  (``b{bucket}/v{batch_id}``); nothing is ever deleted in place. Readers
-  assemble the table from one small JSON manifest mapping
-  bucket -> current version and holding the table's Spark schema, so
-  opening a snapshot infers nothing from parquet footers (as Delta does);
+  (``__b={bucket}/__v={batch_id}``, hive-style, with names no table
+  column uses); nothing is ever deleted in place. Readers assemble the
+  table from one small JSON manifest mapping bucket -> current version
+  and holding the table's Spark schema, so opening a snapshot infers
+  nothing from parquet footers (as Delta does), and every current
+  version dir sits under the one table root, so opening is ONE parquet
+  scan;
 - publishing is an atomic ``os.replace`` of that one manifest file. A
   crash anywhere — mid-staging, mid-rename, mid-GC — leaves the previous
   manifest pointing at fully-written directories, so there is NO state in
@@ -56,7 +59,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +68,9 @@ from .merge import upsert
 
 MANIFEST = "manifest.json"
 BUCKET_COL = "__bucket"
+# hive-style directory levels below the table dir; no table column uses them
+BUCKET_DIR = "__b"
+VERSION_DIR = "__v"
 DEFAULT_N_BUCKETS = 16
 
 
@@ -113,6 +118,16 @@ def history(table_dir: str) -> list[int]:
     return sorted(out)
 
 
+def _snapshot_paths(table_dir: str) -> set[str]:
+    """Version dirs referenced by any retained snapshot manifest."""
+    live: set[str] = set()
+    for batch_id in history(table_dir):
+        snap = read_manifest(table_dir, at_batch=batch_id)
+        if snap:
+            live |= set(current_paths(table_dir, snap))
+    return live
+
+
 def _write_manifest_atomic(table_dir: str, manifest: dict) -> None:
     tmp = _manifest_path(table_dir) + ".tmp"
     with open(tmp, "w") as f:
@@ -120,16 +135,25 @@ def _write_manifest_atomic(table_dir: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(table_dir))  # POSIX-atomic publish
 
 
-def _bucket_dir(table_dir: str, bucket: int | str) -> str:
-    return os.path.join(table_dir, f"b{bucket}")
+def version_dir(table_dir: str, bucket: int | str, version: int) -> str:
+    """Directory of one bucket version: the one place the layout is named."""
+    return os.path.join(table_dir, f"{BUCKET_DIR}={bucket}", f"{VERSION_DIR}={version}")
 
 
 def current_paths(
     table_dir: str, manifest: dict, buckets: list[int] | None = None
 ) -> list[str]:
+    """Version dirs the manifest references (only ``buckets``, if given).
+    Raises on a manifest of the old ``b{k}/v{n}`` layout, whose versions
+    are ``"v{n}"`` strings: such a store is rebuilt, never read in part."""
+    if not all(isinstance(v, int) for v in manifest["buckets"].values()):
+        raise ValueError(
+            f"{table_dir}: manifest references b{{k}}/v{{n}} bucket dirs, a "
+            "layout this store no longer reads — rebuild the table"
+        )
     wanted = None if buckets is None else {str(b) for b in buckets}
     return [
-        os.path.join(_bucket_dir(table_dir, b), v)
+        version_dir(table_dir, b, v)
         for b, v in sorted(manifest["buckets"].items())
         if wanted is None or b in wanted
     ]
@@ -159,17 +183,14 @@ def read_table(
     footer and runs no Spark job; bucket versions older than an additive
     schema evolution read the newer columns as NULL.
 
-    Tables created with ``partition_col`` (date-partitioned silver, SURVEY
-    §4's donated_at composite-index mapping) read as a union of per-
-    bucket-version scans, each rooted at its version dir so Spark's hive-
-    style partition discovery restores the partition column — a range
-    predicate on it then prunes FILES inside every scan (PartitionFilters,
-    guarded by tests/test_storage.py). One scan cannot cover them: Spark
-    refuses several partition roots in one scan ("Conflicting directory
-    structures detected"). One scan per current bucket version
-    (≤ n_buckets): fine at the tens-of-buckets scale this store targets;
-    a thousands-of-buckets deployment wants the date-major layout of a
-    real lakehouse format instead (module docstring).
+    Every table, partitioned or not, opens as ONE parquet scan over the
+    current version dirs, rooted (``basePath``) at the table dir: every
+    level below it is hive-style, so Spark's partition discovery reads
+    the ``__b``/``__v`` layout columns (dropped here) and, for tables
+    created with ``partition_col`` (date-partitioned silver, SURVEY §4's
+    donated_at composite-index mapping), restores the partition column.
+    A range predicate on it then prunes FILES in that scan
+    (PartitionFilters, guarded by tests/test_storage.py).
     """
     manifest = read_manifest(table_dir, at_batch=at_batch)
     if manifest is None or not manifest["buckets"]:
@@ -177,15 +198,13 @@ def read_table(
     paths = current_paths(table_dir, manifest, buckets)
     if not paths:
         return None
-    schema = _table_schema(table_dir, manifest)
-    if manifest.get("partition_col"):
-        df = reduce(
-            DataFrame.unionByName,
-            [spark.read.schema(schema).option("basePath", p).parquet(p) for p in paths],
-        )
-    else:
-        df = spark.read.schema(schema).parquet(*paths)
-    return df if keep_bucket_col else df.drop(BUCKET_COL)
+    hidden = [BUCKET_DIR, VERSION_DIR] + ([] if keep_bucket_col else [BUCKET_COL])
+    return (
+        spark.read.schema(_table_schema(table_dir, manifest))
+        .option("basePath", table_dir)
+        .parquet(*paths)
+        .drop(*hidden)
+    )
 
 
 def vacuum(table_dir: str) -> list[str]:
@@ -202,21 +221,17 @@ def vacuum(table_dir: str) -> list[str]:
     manifest = read_manifest(table_dir)
     if manifest is None:
         return []
-    live = {(f"b{b}", v) for b, v in manifest["buckets"].items()}
-    for batch_id in history(table_dir):
-        snap = read_manifest(table_dir, at_batch=batch_id)
-        if snap:
-            live |= {(f"b{b}", v) for b, v in snap["buckets"].items()}
+    live = set(current_paths(table_dir, manifest)) | _snapshot_paths(table_dir)
     removed: list[str] = []
     for entry in sorted(os.listdir(table_dir)):
         p = os.path.join(table_dir, entry)
         if entry.startswith(".staging-"):
             shutil.rmtree(p, ignore_errors=True)
             removed.append(p)
-        elif entry.startswith("b") and os.path.isdir(p):
+        elif entry.startswith(f"{BUCKET_DIR}=") and os.path.isdir(p):
             for v in sorted(os.listdir(p)):
-                if (entry, v) not in live:
-                    vp = os.path.join(p, v)
+                vp = os.path.join(p, v)
+                if vp not in live:
                     shutil.rmtree(vp, ignore_errors=True)
                     removed.append(vp)
     return removed
@@ -293,8 +308,8 @@ def merge_batch(
 
     ``partition_col`` (set at table creation, recorded in the manifest,
     fixed for the table's life): hive-partition every bucket version by
-    this column — ``b{k}/v{n}/{col}={v}/`` — so date-range reads prune
-    files via Catalyst PartitionFilters (SURVEY §4: the reference's
+    this column — ``__b={k}/__v={n}/{col}={v}/`` — so date-range reads
+    prune files via Catalyst PartitionFilters (SURVEY §4: the reference's
     (donated_at, donor/pot) composite indexes map to "partition by date,
     cluster by key-hash"). Merge correctness is unaffected by rows whose
     partition value changes across versions: a merge always rewrites the
@@ -312,7 +327,7 @@ def merge_batch(
     versioned upsert resolves staleness and the manifest swap is atomic.
     What is NOT safe is re-pointing a stream at a FRESH checkpoint dir
     over an existing retain_history table: streaming batch ids restart at
-    0, and the retry-overwrite of ``v{batch_id}`` dirs below would rewrite
+    0, and the retry-overwrite of ``__v={batch_id}`` dirs below would rewrite
     an old era's version dir and republish its ``manifest-v{id}.json`` —
     time-travel reads of that id would then silently return the new era's
     content. When resetting a checkpoint, either start a new table_dir or
@@ -413,12 +428,11 @@ def merge_batch(
 
         # move staged bucket dirs into place as NEW versions (pure renames;
         # current versions remain untouched and referenced by the manifest)
-        vname = f"v{batch_id}"
         prev = {str(b): manifest["buckets"].get(str(b)) for b in touched}
         for b in touched:
             src = os.path.join(staging, f"__bp={b}")
-            dst = os.path.join(_bucket_dir(table_dir, b), vname)
-            os.makedirs(_bucket_dir(table_dir, b), exist_ok=True)
+            dst = version_dir(table_dir, b, batch_id)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
             # dst can pre-exist only when THIS batch_id is being retried
             # after a crash; its content was already consumed into staging
             # (the existing-read above ran before any mutation), so
@@ -428,7 +442,7 @@ def merge_batch(
 
         # ATOMIC publish: readers switch from old to new state in one rename
         new_buckets = dict(manifest["buckets"])
-        new_buckets.update({str(b): vname for b in touched})
+        new_buckets.update({str(b): batch_id for b in touched})
         published = {
             "n_buckets": n_buckets,
             "buckets": new_buckets,
@@ -452,16 +466,12 @@ def merge_batch(
             # GC strictly after the swap: failures leave garbage, not loss.
             # Only versions no snapshot references (mixed-mode tables keep
             # whatever history they accumulated until vacuum_history).
-            snap_live: set[tuple[str, str]] = set()
-            for hb in history(table_dir):
-                snap = read_manifest(table_dir, at_batch=hb)
-                if snap:
-                    snap_live |= {(f"b{b}", v) for b, v in snap["buckets"].items()}
+            snap_live = _snapshot_paths(table_dir)
             for b, old_v in prev.items():
-                if old_v and old_v != vname and (f"b{b}", old_v) not in snap_live:
-                    shutil.rmtree(
-                        os.path.join(_bucket_dir(table_dir, b), old_v), ignore_errors=True
-                    )
+                if old_v is not None and old_v != batch_id:
+                    old = version_dir(table_dir, b, old_v)
+                    if old not in snap_live:
+                        shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(staging, ignore_errors=True)
         return touched
     finally:

@@ -170,15 +170,16 @@ ENTITY_PIPELINES: dict[str, tuple[Callable[[DataFrame], DataFrame], list[str], s
         "last",
     ),
     # Token entity (tokens/models.py:16-62, utils.py:917-943): bronze
-    # emits version-0 skeletons (decimals=24); streaming.enrich merges
-    # RPC ft_metadata at version=fetch-ns, so last-wins keeps metadata
+    # emits version-0 skeletons (decimals=24) for an RPC metadata fetch;
+    # streaming.enrich does not fill them today (normalize.tokens says why)
     "tokens": (
         lambda p: normalize.tokens(normalize.donations(p)),
         ["id"],
         "last",
     ),
     # TokenHistoricalPrice (tokens/models.py:131-152): NULL-price request
-    # skeletons per (token, Coingecko date); enrich fills, T5 re-picks
+    # skeletons per (token, Coingecko date); nothing fills them today
+    # (normalize.tokens says why)
     "token_prices": (
         lambda p: normalize.token_price_requests(normalize.donations(p)),
         ["token_id", "date_key"],

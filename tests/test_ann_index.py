@@ -110,7 +110,11 @@ def test_probe_reads_only_colliding_buckets(spark, tmp_path):
     }
     sub = silver.read_table(spark, idx, buckets=sorted(probed))
     files = {r[0] for r in sub.select(F.input_file_name()).distinct().collect()}
-    assert files and all(any(f"/b{b}/" in f for b in probed) for f in files)
+    manifest = silver.read_manifest(idx)
+    probed_dirs = [
+        silver.version_dir(idx, b, manifest["buckets"][str(b)]) for b in probed
+    ]
+    assert files and all(any(f"{p}/" in f for p in probed_dirs) for f in files)
 
 
 def test_stream_ann_end_to_end(spark, tmp_path):

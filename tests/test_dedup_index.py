@@ -84,13 +84,15 @@ def test_probe_reads_only_colliding_buckets(spark, tmp_path):
     new_bands = dedup_index.index_bands(_docs_df(spark, [DOCS[0]]))
     bucket_of = silver.bucket_expr(["band", "band_key"], 8)
     probed = {r[0] for r in new_bands.select(bucket_of).distinct().collect()}
-    all_buckets = set(
-        int(k) for k in silver.read_manifest(idx)["buckets"]
-    )
+    manifest = silver.read_manifest(idx)
+    all_buckets = set(int(k) for k in manifest["buckets"])
     assert probed < all_buckets or len(all_buckets) <= len(probed) <= 4
     sub = silver.read_table(spark, idx, buckets=sorted(probed))
     files = {r[0] for r in sub.select(F.input_file_name()).distinct().collect()}
-    assert all(any(f"/b{b}/" in f for b in probed) for f in files)
+    probed_dirs = [
+        silver.version_dir(idx, b, manifest["buckets"][str(b)]) for b in probed
+    ]
+    assert all(any(f"{p}/" in f for p in probed_dirs) for f in files)
 
 
 def test_stream_dedup_end_to_end(spark, tmp_path):

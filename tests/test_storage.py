@@ -155,14 +155,21 @@ def test_silver_date_partition_prunes_files(spark, tmp_path):
         batch_id=1, n_buckets=4, partition_col="donated_date",
     )
     # layout: every bucket version contains hive date dirs
-    assert glob.glob(f"{d}/b*/v1/donated_date=2024-01-0*"), "no hive date dirs"
+    versions = silver.current_paths(d, silver.read_manifest(d))
+    assert versions and all(glob.glob(f"{v}/donated_date=2024-01-0*") for v in versions)
 
     # opening reads the manifest schema: no footer inference, no job —
-    # full and bucket-pruned — and the manifest describes the frame
+    # full and bucket-pruned — and the manifest describes the frame. Every
+    # bucket version sits under the table root, so each open is ONE parquet
+    # scan (no union of per-bucket-version scans)
     t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
     assert jobs == []
-    _, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d, buckets=[0, 1]))
+    pruned, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d, buckets=[0, 1]))
     assert jobs == []
+    for frame in (t, pruned):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "Union" not in plan, plan
     assert _manifest_fields(silver, d) == _fields(
         silver.read_table(spark, d, keep_bucket_col=True)
     )
@@ -202,6 +209,32 @@ def test_silver_date_partition_prunes_files(spark, tmp_path):
             spark, d, batch([("k1", day(1), 1, 3)]), ["dedup_key"], "version",
             batch_id=3, n_buckets=4,
         )
+
+    # a store in the old b{k}/v{n} layout is never read in part: opening it
+    # (full or bucket-pruned) and merging into it raise, naming the table,
+    # and the failed merge leaves the store as it was
+    import json
+    import shutil
+
+    old = str(tmp_path / "legacy_donations")
+    m = silver.read_manifest(d)
+    for b, v in m["buckets"].items():
+        shutil.copytree(silver.version_dir(d, b, v), os.path.join(old, f"b{b}", f"v{v}"))
+    old_buckets = {b: f"v{v}" for b, v in m["buckets"].items()}
+    with open(os.path.join(old, silver.MANIFEST), "w") as f:
+        json.dump({**m, "buckets": old_buckets}, f)
+    for open_or_merge in (
+        lambda: silver.read_table(spark, old),
+        lambda: silver.read_table(spark, old, buckets=[0]),
+        lambda: silver.merge_batch(
+            spark, old, batch([("k1", day(1), 1, 3)]), ["dedup_key"], "version",
+            batch_id=3, n_buckets=4, partition_col="donated_date",
+        ),
+    ):
+        with _pytest.raises(ValueError, match="legacy_donations"):
+            open_or_merge()
+    assert silver.read_manifest(old)["buckets"] == old_buckets
+    assert sorted(os.listdir(old)) == sorted([silver.MANIFEST, *(f"b{b}" for b in m["buckets"])])
 
 
 def test_silver_additive_schema_evolution(spark, tmp_path):

@@ -13,7 +13,6 @@ directory of block JSON files and verifies:
 from __future__ import annotations
 
 import base64
-import glob
 import json
 import os
 import threading
@@ -132,7 +131,8 @@ def test_stream_ingest_available_now_and_resume(spark, tmp_path):
 
     m = _silver.read_manifest(f"{out}/donations")
     assert m["partition_col"] == "donated_date"
-    assert _glob.glob(f"{out}/donations/b*/v*/donated_date=*"), "no hive date dirs"
+    versions = _silver.current_paths(f"{out}/donations", m)
+    assert versions and all(_glob.glob(f"{v}/donated_date=*") for v in versions)
     assert all(r["donated_date"] is not None for r in after.values())
 
 
@@ -198,14 +198,14 @@ def test_silver_merge_rewrites_only_touched_buckets(spark, tmp_path):
     # untouched buckets keep their v1 dirs verbatim — no rewrite happened
     for b, v in m1["buckets"].items():
         if int(b) != touched[0]:
-            assert m2["buckets"][b] == v == "v1"
-    assert m2["buckets"][str(touched[0])] == "v2"
+            assert m2["buckets"][b] == v == 1
+    assert m2["buckets"][str(touched[0])] == 2
     # superseded touched-bucket version is GC'd after publish
-    assert not os.path.exists(os.path.join(d, f"b{touched[0]}", "v1"))
+    assert not os.path.exists(silver.version_dir(d, touched[0], 1))
     # pre-write repartition coalesces each bucket version to ONE data file
     # (no tasks-x-buckets small-file fragmentation per trigger)
     v2_files = [
-        f for f in os.listdir(os.path.join(d, f"b{touched[0]}", "v2"))
+        f for f in os.listdir(silver.version_dir(d, touched[0], 2))
         if f.endswith(".parquet")
     ]
     assert len(v2_files) == 1, v2_files
@@ -215,7 +215,7 @@ def test_silver_merge_rewrites_only_touched_buckets(spark, tmp_path):
     # "second micro-batch reads only touched partitions" guarantee)
     pruned = silver.read_table(spark, d, buckets=touched, keep_bucket_col=True)
     files = pruned.inputFiles()
-    assert files and all(f"/b{touched[0]}/" in f for f in files)
+    assert files and all(f"{silver.version_dir(d, touched[0], 2)}/" in f for f in files)
     full = silver.read_table(spark, d, keep_bucket_col=True)
     assert len(full.inputFiles()) > len(files)
 
@@ -510,7 +510,7 @@ def test_silver_vacuum_removes_only_unreferenced_dirs(spark, tmp_path):
     # plant crash debris: an abandoned staging dir and an orphan version
     os.makedirs(os.path.join(d, ".staging-v99", "__bp=0"))
     some_bucket = next(iter(silver.read_manifest(d)["buckets"]))
-    orphan = os.path.join(d, f"b{some_bucket}", "v99")
+    orphan = silver.version_dir(d, some_bucket, 99)
     os.makedirs(orphan)
     removed = silver.vacuum(d)
     assert os.path.join(d, ".staging-v99") in removed and orphan in removed
@@ -693,5 +693,5 @@ def test_silver_merge_with_caller_supplied_touched_buckets(spark, tmp_path):
             touched_buckets=sorted(touched + [empty]),
         )
     assert silver.read_manifest(given) == mg
-    assert not glob.glob(os.path.join(given, "b*", "v4"))
+    assert not any(os.path.exists(silver.version_dir(given, b, 4)) for b in range(4))
     assert state(given) == {"a": ("a2", 2), "b": ("b3", 3), "c": ("c2", 2)}
