@@ -492,10 +492,6 @@ def simhash_table(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> 
     return votes.select(F.col(id_col), sim.alias("simhash"))
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,

@@ -54,24 +54,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image|audio|video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("source_uri", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -2120,10 +2102,6 @@ def audio_spectral(media: DataFrame, frame_len: int = 1024) -> DataFrame:
 # --------------------------------------------------------------------------
 # MP4 / ISO-BMFF video metadata (box walk — no pixel or sample decode)
 # --------------------------------------------------------------------------
-
-# container boxes whose bodies are themselves box sequences
-_MP4_CONTAINERS = frozenset((b"moov", b"trak", b"mdia", b"minf", b"stbl"))
-
 
 class Mp4Info(NamedTuple):
     brand: str

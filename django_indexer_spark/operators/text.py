@@ -71,19 +71,6 @@ def bpe_token_estimate(col: Column | str) -> Column:
     return (subwords + digits + punct).cast("long")
 
 
-def char_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Character n-grams of the lower-cased text (shingles for minhash).
-
-    PERF: same embedded-expression caveat as word_ngrams — ``c`` re-lowers
-    the text per index. For long documents, lower() into a materialized
-    column first and pass that column in."""
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1))),
-        lambda i: c.substr(i, F.lit(n)),
-    )
-
-
 def word_ngrams(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles, space-joined.
 

@@ -22,11 +22,6 @@ def top1_per_group(
     return df.withColumn("__rn", fn.over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def topk_per_group(df: DataFrame, part_by: list[str], order_by: list, k: int) -> DataFrame:
-    w = Window.partitionBy(*part_by).orderBy(*order_by)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
-
-
 def ranked(df: DataFrame, order_by: list, alias: str = "rank", dense: bool = False) -> DataFrame:
     """W3 — leaderboard rank (accounts/api.py:85-88 materializes by sort;
     we expose the explicit rank column variant).

@@ -11,9 +11,12 @@ The fix: fingerprint what each registry query actually executes —
 - its oracle SQL string,
 - the full text of every package module the function's code references
   by leaf name (co_names ∩ module names — e.g. ``sorts``, ``text``,
-  ``linkage``; ambiguous leaf names like ``windows``, which exists in
-  both operators/ and streaming/, hash BOTH files: over-invalidation
-  just re-verifies, under-invalidation hides a change).
+  ``linkage``; a dotted import such as ``from ..streaming.phash_index
+  import stream_phash`` puts ``streaming.phash_index`` in co_names and
+  counts by its last component; ambiguous leaf names like ``windows``,
+  which exists in both operators/ and streaming/, hash BOTH files:
+  over-invalidation just re-verifies, under-invalidation hides a
+  change). Modules reached only through another module are not hashed.
 
 ``tools/query_hashes.json`` stores the fingerprint recorded at the
 last LOCAL VERIFICATION (tools/parity_check.py updates it only for
@@ -74,7 +77,8 @@ def query_fingerprint(fn, oracle: str | None) -> str:
         src = getattr(fn, "__name__", repr(fn))
     parts = [src, oracle or ""]
     mods = _module_files()
-    for ref in sorted(set(fn.__code__.co_names) & set(mods)):
+    leaves = {name.rsplit(".", 1)[-1] for name in fn.__code__.co_names}
+    for ref in sorted(leaves & set(mods)):
         for path in mods[ref]:
             parts.append(_file_hash(path))
     return hashlib.sha256("\x00".join(parts).encode()).hexdigest()

@@ -20,16 +20,16 @@ vector twin of streaming/dedup_index.py:
   (``merge_batch(bucket_by=["bucket"])``): a probe reads only the
   physical buckets the batch's (multi-)probe LSH buckets hash into —
   probe cost scales with the BATCH, not the corpus;
-- per micro-batch (foreachBatch, exactly like pipeline.stream_ingest):
-    1. bucket + norm the incoming vectors (narrow map);
-    2. candidates = colliding silver buckets UNION the batch itself
-       (so two vectors arriving together still see each other), deduped
-       on vec_id so a crash-replay cannot double-score a neighbor;
-    3. exact cosine inside the bucket equi-join, top-k per new vector
-       (``similarity.lsh_ann_topk``'s join shape against stored state);
-    4. sink the neighbor rows (distributed append — no driver
-       materialization);
-    5. merge the batch's index rows in (touched buckets only).
+- this module holds only the domain code: the index rows
+  (``index_rows``), the probe (``probe``: candidates = colliding silver
+  buckets UNION the batch itself, so two vectors arriving together
+  still see each other, deduped on vec_id; exact cosine inside the
+  bucket equi-join, top-k per new vector — ``similarity.lsh_ann_topk``'s
+  join shape against stored state) and the key, ``bucket_by`` and
+  multi-probe read set (``spec``). The per-batch steps — bucket
+  collect, versioned probe read, ``batch_id``-partitioned neighbors log,
+  index merge, stream start — and the replay contract are
+  ``streaming/index_gate.py``'s.
 
 INVARIANT (tests/test_ann_index.py): feeding a corpus through in ANY
 batch split yields, for every vector, exactly the neighbors
@@ -55,8 +55,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity
 from ..sources import silver
-
-DEFAULT_N_BUCKETS = 16
+from . import index_gate
 
 
 def index_rows(
@@ -76,39 +75,24 @@ def index_rows(
     )
 
 
-def touched_buckets(new_rows: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> list[int]:
-    """The batch's distinct physical-bucket ids — ONE collect shared by
-    the single-probe ``probe`` and ``update`` (identical
-    ``bucket_expr(["bucket"])`` over the same rows; round-13, the extra
-    per-batch collect was a pure duplicate driver job). Multi-probe
-    queries fan out to MORE buckets than the batch writes, so a
-    multi-probe ``probe`` must keep its own collect."""
-    bucket_of = silver.bucket_expr(["bucket"], n_buckets)
-    return sorted(
-        r[0] for r in new_rows.select(bucket_of.alias("b")).distinct().collect()
-    )
+def _multi_probe(rows: DataFrame, n_planes: int) -> DataFrame:
+    """One row per probed LSH bucket: the home bucket and its one-bit
+    neighbors."""
+    home = F.col("bucket")
+    probes = F.array(home, *[home.bitwiseXOR(F.lit(2**p)) for p in range(n_planes)])
+    return rows.withColumn("bucket", F.explode(probes))
 
 
 def probe(
-    spark: SparkSession,
-    index_dir: str,
-    new_rows: DataFrame,
-    k: int = 5,
-    n_planes: int = 4,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    multi_probe: bool = False,
-    round_dp: int = 6,
-    probe_buckets: list[int] | None = None,
+    existing: DataFrame | None, new_rows: DataFrame, k: int = 5, n_planes: int = 4,
+    multi_probe: bool = False, round_dp: int = 6,
 ) -> DataFrame:
     """Top-k neighbors for one batch of index rows, LAZY: (q_id, c_id,
     cosine, rnk). Candidates are the union of (a) previously-ingested
-    vectors in the probed silver buckets and (b) the batch itself, deduped
-    on vec_id (a replayed batch's rows already sit in the index — without
-    the dedup they would score twice and shift ranks).
-
-    Consume the result BEFORE merging the same batch into the index;
-    ``probe_and_update``/``stream_ann`` sequence this correctly.
-    """
+    vectors in ``existing`` (the probed buckets of the index, opened by
+    the gate) and (b) the batch itself, deduped on vec_id (a vector
+    re-ingested under its own id would otherwise score twice and shift
+    ranks)."""
     queries = new_rows.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_vec"),
@@ -116,18 +100,7 @@ def probe(
         "bucket",
     )
     if multi_probe:
-        home = F.col("bucket")
-        probes = F.array(home, *[home.bitwiseXOR(F.lit(2**p)) for p in range(n_planes)])
-        queries = queries.withColumn("bucket", F.explode(probes))
-
-    if probe_buckets is None or multi_probe:
-        # multi-probe fans queries out past the batch's own buckets — a
-        # caller-supplied write-side set would under-read; re-collect
-        bucket_of = silver.bucket_expr(["bucket"], n_buckets)
-        probe_buckets = sorted(
-            r[0] for r in queries.select(bucket_of.alias("b")).distinct().collect()
-        )
-    existing = silver.read_table(spark, index_dir, buckets=probe_buckets)
+        queries = _multi_probe(queries, n_planes)
     cand = new_rows.select("vec_id", "bucket", "vnorm", "embedding")
     if existing is not None:
         cand = cand.unionByName(
@@ -161,29 +134,17 @@ def probe(
     )
 
 
-def update(
-    spark: SparkSession,
-    index_dir: str,
-    new_rows: DataFrame,
-    batch_id: int,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    touched: list[int] | None = None,
-) -> list[int]:
-    """Merge one batch's index rows in (touched buckets only; idempotent
-    per batch_id). ``touched``: pass ``touched_buckets(...)`` when the
-    caller already collected it — the version column added here never
-    changes the bucket routing."""
-    return silver.merge_batch(
-        spark,
-        index_dir,
-        new_rows.withColumn("version", F.lit(batch_id).cast("long")),
-        ["vec_id"],
-        "version",
-        keep="last",
-        batch_id=batch_id,
-        n_buckets=n_buckets,
-        bucket_by=["bucket"],
-        touched_buckets=touched,
+def spec(
+    id_col: str, vec_col: str, k: int, n_planes: int, dim: int, multi_probe: bool
+) -> index_gate.IndexSpec:
+    """The bucket index as an ``index_gate`` spec: keyed ``vec_id``,
+    bucketed by the LSH ``bucket``. Multi-probe reads every bucket its
+    queries fan out to, which is more than the batch writes."""
+    return index_gate.IndexSpec(
+        rows=lambda vecs: index_rows(vecs, id_col, vec_col, n_planes, dim),
+        probe=lambda existing, rows: probe(existing, rows, k, n_planes, multi_probe),
+        key=["vec_id"], bucket_by=["bucket"],
+        probe_rows=(lambda rows: _multi_probe(rows, n_planes)) if multi_probe else None,
     )
 
 
@@ -197,27 +158,16 @@ def probe_and_update(
     k: int = 5,
     n_planes: int = 4,
     dim: int = 64,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
     multi_probe: bool = False,
 ) -> DataFrame:
-    """Convenience batch API: probe, then advance the index; returns the
-    neighbor rows MATERIALIZED (driver-side — bounded by batch × k).
-    Streaming callers use ``stream_ann``, which sinks distributed."""
-    new_rows = index_rows(vecs, id_col, vec_col, n_planes, dim).persist()
-    try:
-        buckets = touched_buckets(new_rows, n_buckets)
-        found = probe(
-            spark, index_dir, new_rows, k, n_planes, n_buckets, multi_probe,
-            probe_buckets=buckets,
-        )
-        result = spark.createDataFrame(
-            found.collect(),
-            schema="q_id long, c_id long, cosine double, rnk int",
-        )
-        update(spark, index_dir, new_rows, batch_id, n_buckets, touched=buckets)
-        return result
-    finally:
-        new_rows.unpersist()
+    """Probe, then advance the index; returns the neighbor rows
+    MATERIALIZED (bounded by batch × k). Streaming callers use
+    ``stream_ann``, which writes them distributed."""
+    return index_gate.run_batch(
+        spark, spec(id_col, vec_col, k, n_planes, dim, multi_probe), index_dir,
+        vecs, batch_id, n_buckets,
+    )
 
 
 def stream_ann(
@@ -232,36 +182,14 @@ def stream_ann(
     k: int = 5,
     n_planes: int = 4,
     dim: int = 64,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
     multi_probe: bool = False,
 ):
-    """Wire the index into Structured Streaming: per trigger, each new
-    vector's top-k neighbors (among everything ingested up to and
-    including its own batch) APPEND to ``neighbors_dir`` and the bucket
-    index advances. Same foreachBatch + checkpoint shape as
-    pipeline.stream_ingest — crash/replay re-appends the same neighbor
-    rows (at-least-once log; readers dedupe on (q_id, c_id))."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        new_rows = index_rows(batch_df, id_col, vec_col, n_planes, dim).persist()
-        try:
-            buckets = touched_buckets(new_rows, n_buckets)
-            found = probe(
-                spark, index_dir, new_rows, k, n_planes, n_buckets, multi_probe,
-                probe_buckets=buckets,
-            )
-            (
-                found.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("append")
-                .parquet(neighbors_dir)
-            )
-            update(spark, index_dir, new_rows, batch_id, n_buckets, touched=buckets)
-        finally:
-            new_rows.unpersist()
-
-    writer = vec_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    """Per trigger, each new vector's top-k neighbors (among everything
+    ingested up to and including its own batch) go to ``neighbors_dir``
+    (a ``batch_id``-partitioned parquet log) and the bucket index
+    advances (``index_gate.stream``)."""
+    return index_gate.stream(
+        spark, spec(id_col, vec_col, k, n_planes, dim, multi_probe), vec_stream,
+        index_dir, neighbors_dir, checkpoint_dir, available_now, n_buckets,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -9,20 +9,22 @@ per trigger, for the batch of newly-arrived WARC shards:
   1. ``warc.crawl_to_documents`` — record explode → 200-OK HTML →
      html_to_text → scored ``documents`` rows (one Python stage, rest
      codegen);
-  2. land the documents in a distributed parquet log partitioned by
-     batch_id with dynamic-partition overwrite — a replayed batch
-     rewrites exactly its own partition, so the log is exactly-once
-     under Structured Streaming's replay contract (the bronze→silver
-     landing the batch operators read);
-  3. probe the persistent minhash band index for near-dup collisions
-     against everything ALREADY INGESTED (colliding buckets only —
-     cost ∝ batch, not corpus) and append found pairs to the pairs log;
-  4. merge the batch's band rows into the index (touched buckets only,
-     idempotent per batch_id — crash/replay re-finds the same pairs).
+  2. land the documents in the ``batch_id``-partitioned docs log
+     (``index_gate.write_log``: each batch overwrites only its own
+     partition, so a replayed batch rewrites exactly its own rows — the
+     bronze→silver landing the batch operators read);
+  3. run the documents through the persistent minhash band index
+     (``dedup_index.spec`` under ``index_gate.run_batch``): probe for
+     near-dup collisions against everything ingested BEFORE this batch
+     (colliding buckets only — cost ∝ batch, not corpus), write the
+     found pairs to the pairs log the same way, and merge the batch's
+     band rows into the index (touched buckets only, idempotent per
+     batch_id).
 
-Same checkpoint/foreachBatch contract as streaming/dedup_index.py (the
-probe/update steps ARE that module's); the only new code is the glue,
-which is the point — every stage is an already-tested operator.
+The stream, the logs and the replay contract are
+streaming/index_gate.py's, the index is streaming/dedup_index.py's; the
+only new code is the glue, which is the point — every stage is an
+already-tested operator.
 """
 
 from __future__ import annotations
@@ -30,8 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import silver
 from ..sources import warc as warc_src
-from . import dedup_index
+from . import dedup_index, index_gate
 
 
 def stream_crawl_ingest(
@@ -44,54 +47,23 @@ def stream_crawl_ingest(
     available_now: bool = True,
     num_hashes: int = 8,
     bands: int = 4,
-    n_buckets: int = dedup_index.DEFAULT_N_BUCKETS,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
 ):
     """Start the crawl-ingest stream over a WARC shard source
-    (``warc_id``, ``payload`` schema). Documents land in ``docs_dir``
-    (append log with batch_id), near-dup pairs in ``pairs_dir``, and
-    the band index advances under ``index_dir``."""
+    (``warc_id``, ``payload`` schema). Documents land in ``docs_dir``,
+    near-dup pairs in ``pairs_dir`` (both ``batch_id``-partitioned
+    logs), and the band index advances under ``index_dir``."""
+    spec = dedup_index.spec("text", "doc_id", num_hashes, bands)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         docs = warc_src.crawl_to_documents(batch_df).persist()
         try:
-            # logs are PARTITIONED BY batch_id and written with dynamic
-            # partition overwrite: a replayed micro-batch rewrites only
-            # its own batch_id partition, so crash/replay never leaves
-            # duplicate doc/pair rows in the logs (round-10 ADVICE —
-            # blind append only kept the band-index merge idempotent)
-            (
-                docs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(docs_dir)
-            )
-            new_bands = dedup_index.index_bands(
-                docs, "text", "doc_id", num_hashes, bands
-            ).persist()
-            try:
-                pairs = dedup_index.probe(
-                    spark, index_dir, new_bands, n_buckets, before_version=batch_id
-                )
-                (
-                    pairs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                    .write.option("partitionOverwriteMode", "dynamic")
-                    .mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(pairs_dir)
-                )
-                dedup_index.update(spark, index_dir, new_bands, batch_id, n_buckets)
-            finally:
-                new_bands.unpersist()
+            index_gate.write_log(docs, docs_dir, batch_id)
+            index_gate.run_batch(spark, spec, index_dir, docs, batch_id, n_buckets, pairs_dir)
         finally:
             docs.unpersist()
 
-    writer = warc_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return index_gate.start(warc_stream, process, checkpoint_dir, available_now)
 
 
 def frontier_update(

@@ -17,17 +17,16 @@ Design — a persistent LSH band index as a silver table:
   (``merge_batch(bucket_by=...)``): a probe for incoming band keys reads
   only the buckets those keys hash into — the probe cost scales with the
   BATCH, not the corpus;
-- per micro-batch (foreachBatch-shaped, exactly like
-  pipeline.stream_ingest's entity merges):
-    1. band the incoming docs (one pass, map-side combine);
-    2. candidate pairs vs the EXISTING index = equi-join on
-       (band, band_key) against ONLY the colliding buckets;
-    3. candidate pairs within the batch = the batch self-join
-       (dedup.minhash_candidate_pairs);
-    4. sink the pairs (distributed write — no driver materialization);
-    5. merge the new band rows into the index (touched buckets only).
-  Replay of a failed batch re-finds the same pairs and re-merges
-  idempotently (T3 semantics).
+- this module holds only the domain code: the band rows
+  (``index_bands``), the probe join (``probe``: candidate pairs vs the
+  EXISTING index = equi-join on (band, band_key) against ONLY the
+  colliding buckets, plus the within-batch self-join
+  ``dedup.minhash_candidate_pairs``) and the key and ``bucket_by``
+  columns (``spec``). The per-batch steps — bucket collect, versioned
+  probe read, ``batch_id``-partitioned pairs log, index merge, stream
+  start — and the replay contract are ``streaming/index_gate.py``'s:
+  a replayed batch re-finds exactly its first run's pairs and rewrites
+  its own log partition.
 
 IMMUTABILITY CONTRACT (from merge_batch's bucket_by): a doc_id's text —
 hence its band_key per band — must not change across batches. Re-ingest
@@ -48,8 +47,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..sources import silver
-
-DEFAULT_N_BUCKETS = 16
+from . import index_gate
 
 
 def index_bands(
@@ -64,48 +62,11 @@ def index_bands(
     return out.select(F.col(id_col).alias("doc_id"), "band", "band_key")
 
 
-def touched_buckets(new_bands: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> list[int]:
-    """The batch's distinct physical-bucket ids — ONE collect shared by
-    ``probe`` (which buckets to read) and ``update`` (which buckets to
-    rewrite): both are the same ``bucket_expr(["band","band_key"])`` over
-    the same rows, so collecting twice per micro-batch was a pure extra
-    driver job (round-13, guide §1.2 step 1)."""
-    bucket_of = silver.bucket_expr(["band", "band_key"], n_buckets)
-    return sorted(
-        r[0] for r in new_bands.select(bucket_of.alias("b")).distinct().collect()
-    )
-
-
-def probe(
-    spark: SparkSession,
-    index_dir: str,
-    new_bands: DataFrame,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    before_version: int | None = None,
-    probe_buckets: list[int] | None = None,
-) -> DataFrame:
+def probe(existing: DataFrame | None, new_bands: DataFrame) -> DataFrame:
     """Candidate pairs for one batch of band rows, LAZY: ``(id_new,
     id_seen, source)`` — 'index' = collision with a previously-ingested
-    doc (probe reads ONLY the buckets the batch's (band, band_key)s hash
-    into — bounded driver collect of ≤ n_buckets ids, the silver store's
-    standard pruning pattern), 'batch' = within-batch collision.
-
-    Consume the result BEFORE merging the same batch into the index (the
-    plan reads index state lazily); ``probe_and_update``/``stream_dedup``
-    sequence this correctly.
-
-    ``before_version``: pass the current batch_id to make a REPLAYED
-    batch probe exactly the state the original run saw — index rows
-    merged at version >= batch_id (the crashed attempt's own partial
-    merge) are excluded, so the found pairs are replay-deterministic
-    (round-10 ADVICE: exactly-once pairs logs need this plus a
-    batch_id-partitioned overwrite sink).
-    """
-    if probe_buckets is None:
-        probe_buckets = touched_buckets(new_bands, n_buckets)
-    existing = silver.read_table(spark, index_dir, buckets=probe_buckets)
-    if existing is not None and before_version is not None:
-        existing = existing.filter(F.col("version") < F.lit(int(before_version)))
+    doc in ``existing`` (the colliding buckets of the index, opened by
+    the gate), 'batch' = within-batch collision."""
     within = dedup.minhash_candidate_pairs(
         new_bands.select("doc_id", "band", "band_key"), "doc_id"
     ).select(
@@ -120,8 +81,7 @@ def probe(
             existing.select(F.col("doc_id").alias("id_seen"), "band", "band_key"),
             ["band", "band_key"],
         )
-        # replayed batches: a doc already in the index must not pair with
-        # itself
+        # a doc re-ingested under its own id must not pair with itself
         .filter(F.col("doc_id") != F.col("id_seen"))
         .select(
             F.col("doc_id").alias("id_new"),
@@ -133,29 +93,13 @@ def probe(
     return vs_index.unionByName(within)
 
 
-def update(
-    spark: SparkSession,
-    index_dir: str,
-    new_bands: DataFrame,
-    batch_id: int,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    touched: list[int] | None = None,
-) -> list[int]:
-    """Merge one batch's band rows into the index (touched buckets only;
-    idempotent per batch_id). ``touched``: pass ``touched_buckets(...)``
-    when the caller already collected it for the probe — the version
-    column added here never changes the bucket routing."""
-    return silver.merge_batch(
-        spark,
-        index_dir,
-        new_bands.withColumn("version", F.lit(batch_id).cast("long")),
-        ["doc_id", "band"],
-        "version",
-        keep="last",
-        batch_id=batch_id,
-        n_buckets=n_buckets,
-        bucket_by=["band", "band_key"],
-        touched_buckets=touched,
+def spec(text_col: str, id_col: str, num_hashes: int, bands: int) -> index_gate.IndexSpec:
+    """The band index as an ``index_gate`` spec: keyed ``(doc_id, band)``,
+    bucketed by ``(band, band_key)``."""
+    return index_gate.IndexSpec(
+        rows=lambda docs: index_bands(docs, text_col, id_col, num_hashes, bands),
+        probe=probe,
+        key=["doc_id", "band"], bucket_by=["band", "band_key"],
     )
 
 
@@ -168,25 +112,16 @@ def probe_and_update(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
 ) -> DataFrame:
-    """Convenience batch API: probe, then advance the index; returns the
-    pairs MATERIALIZED (driver-side — bounded by the batch's collision
-    count; a batch emitting millions of candidate pairs means the band
-    curve is mistuned, not that this collect needs to scale). Streaming
-    callers use ``stream_dedup``, which sinks pairs distributed instead.
-    """
-    new_bands = index_bands(docs, text_col, id_col, num_hashes, bands).persist()
-    try:
-        buckets = touched_buckets(new_bands, n_buckets)
-        pairs = probe(spark, index_dir, new_bands, n_buckets, probe_buckets=buckets)
-        result = spark.createDataFrame(
-            pairs.collect(), schema="id_new long, id_seen long, source string"
-        )
-        update(spark, index_dir, new_bands, batch_id, n_buckets, touched=buckets)
-        return result
-    finally:
-        new_bands.unpersist()
+    """Probe, then advance the index; returns the pairs MATERIALIZED (a
+    batch emitting millions of candidate pairs means the band curve is
+    mistuned, not that this collect needs to scale). Streaming callers
+    use ``stream_dedup``, which writes pairs distributed instead."""
+    return index_gate.run_batch(
+        spark, spec(text_col, id_col, num_hashes, bands), index_dir, docs,
+        batch_id, n_buckets,
+    )
 
 
 def stream_dedup(
@@ -200,34 +135,12 @@ def stream_dedup(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
 ):
-    """Wire the index into Structured Streaming: per trigger, found pairs
-    APPEND to ``pairs_dir`` (a parquet log of near-dup events, written
-    distributed — the executor-side sink, no driver materialization) and
-    the band index advances. Same foreachBatch + checkpoint shape as
-    pipeline.stream_ingest, so crash/replay semantics are identical
-    (a replayed batch re-appends its pairs; readers of the pairs log
-    dedupe on (id_new, id_seen) — at-least-once, like every append log).
-    """
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        new_bands = index_bands(batch_df, text_col, id_col, num_hashes, bands).persist()
-        try:
-            buckets = touched_buckets(new_bands, n_buckets)
-            pairs = probe(spark, index_dir, new_bands, n_buckets, probe_buckets=buckets)
-            (
-                pairs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("append")
-                .parquet(pairs_dir)
-            )
-            update(spark, index_dir, new_bands, batch_id, n_buckets, touched=buckets)
-        finally:
-            new_bands.unpersist()
-
-    writer = docs_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    """Per trigger, the found pairs go to ``pairs_dir`` (a
+    ``batch_id``-partitioned parquet log of near-dup events) and the
+    band index advances (``index_gate.stream``)."""
+    return index_gate.stream(
+        spark, spec(text_col, id_col, num_hashes, bands), docs_stream,
+        index_dir, pairs_dir, checkpoint_dir, available_now, n_buckets,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -15,12 +15,15 @@ to media), with pHash Hamming LSH in place of minhash banding:
 - the silver table is BUCKETED BY ``(band, chunk)``: a probe for an
   incoming batch reads only the buckets its chunks hash into — probe
   cost scales with the BATCH, not the corpus;
-- per micro-batch: hash the incoming images (Arrow-batched decode,
-  blobs never shuffle), probe the colliding buckets for Hamming
-  candidates, verify JVM-side with bit_count(xor) <= max_hamming,
-  append pairs to a distributed parquet log, merge the new band rows
-  into the index. Replay re-finds the same pairs and re-merges
-  idempotently (T3 semantics).
+- this module holds only the domain code: the index rows
+  (``index_rows``: hash the incoming images, Arrow-batched decode,
+  blobs never shuffle), the probe (``probe``: Hamming candidates from
+  the colliding buckets, verified JVM-side with bit_count(xor) <=
+  max_hamming, plus the within-batch pairs) and the key and
+  ``bucket_by`` columns (``spec``). The per-batch steps — bucket
+  collect, versioned probe read, ``batch_id``-partitioned pairs log,
+  index merge, stream start — and the replay contract are
+  ``streaming/index_gate.py``'s.
 
 Batch-split equivalence (the oracle the unit tests pin): within-batch
 pairs ∪ batch-vs-index pairs across ANY partition of the corpus equal
@@ -40,8 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators import multimodal
 from ..sources import silver
-
-DEFAULT_N_BUCKETS = 16
+from . import index_gate
 
 
 def index_rows(media: DataFrame, bands: int = 4) -> DataFrame:
@@ -54,33 +56,13 @@ def index_rows(media: DataFrame, bands: int = 4) -> DataFrame:
     )
 
 
-def touched_buckets(new_rows: DataFrame, n_buckets: int = DEFAULT_N_BUCKETS) -> list[int]:
-    """The batch's distinct physical-bucket ids — ONE collect shared by
-    ``probe`` and ``update`` (identical ``bucket_expr(["band","chunk"])``
-    over the same rows; round-13, the duplicate per-batch collect was a
-    pure extra driver job)."""
-    bucket_of = silver.bucket_expr(["band", "chunk"], n_buckets)
-    return sorted(
-        r[0] for r in new_rows.select(bucket_of.alias("b")).distinct().collect()
-    )
-
-
 def probe(
-    spark: SparkSession,
-    index_dir: str,
-    new_rows: DataFrame,
-    max_hamming: int = 3,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    bands: int = 4,
-    probe_buckets: list[int] | None = None,
+    existing: DataFrame | None, new_rows: DataFrame, max_hamming: int = 3, bands: int = 4
 ) -> DataFrame:
     """Hamming near-dup pairs for one batch, LAZY: (id_new, id_seen,
     hamming, source) — 'index' = collision with a previously-ingested
-    image (reads ONLY the buckets the batch's (band, chunk)s hash into),
-    'batch' = within-batch collision. Consume BEFORE merging the batch
-    (``stream_phash`` sequences this)."""
-    if probe_buckets is None:
-        probe_buckets = touched_buckets(new_rows, n_buckets)
+    image in ``existing`` (the colliding buckets of the index, opened by
+    the gate), 'batch' = within-batch collision."""
     within = (
         multimodal.phash_near_dup_pairs(
             new_rows.select(F.col("media_id"), "phash").distinct(),
@@ -99,7 +81,6 @@ def probe(
             F.lit("batch").alias("source"),
         )
     )
-    existing = silver.read_table(spark, index_dir, buckets=probe_buckets)
     if existing is None:
         return within
     vs_index = (
@@ -112,8 +93,7 @@ def probe(
             ),
             ["band", "chunk"],
         )
-        # replayed batches: an image already in the index must not pair
-        # with itself
+        # an image re-ingested under its own id must not pair with itself
         .filter(F.col("media_id") != F.col("id_seen"))
         .select(
             F.col("media_id").alias("id_new"),
@@ -127,29 +107,13 @@ def probe(
     return vs_index.unionByName(within)
 
 
-def update(
-    spark: SparkSession,
-    index_dir: str,
-    new_rows: DataFrame,
-    batch_id: int,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    touched: list[int] | None = None,
-) -> list[int]:
-    """Merge one batch's band rows into the index (touched buckets only;
-    idempotent per batch_id). ``touched``: pass ``touched_buckets(...)``
-    when the caller already collected it — the version column added here
-    never changes the bucket routing."""
-    return silver.merge_batch(
-        spark,
-        index_dir,
-        new_rows.withColumn("version", F.lit(batch_id).cast("long")),
-        ["media_id", "band"],
-        "version",
-        keep="last",
-        batch_id=batch_id,
-        n_buckets=n_buckets,
-        bucket_by=["band", "chunk"],
-        touched_buckets=touched,
+def spec(max_hamming: int, bands: int) -> index_gate.IndexSpec:
+    """The band index as an ``index_gate`` spec: keyed ``(media_id,
+    band)``, bucketed by ``(band, chunk)``."""
+    return index_gate.IndexSpec(
+        rows=lambda media: index_rows(media, bands),
+        probe=lambda existing, rows: probe(existing, rows, max_hamming, bands),
+        key=["media_id", "band"], bucket_by=["band", "chunk"],
     )
 
 
@@ -160,28 +124,15 @@ def probe_and_update(
     batch_id: int,
     max_hamming: int = 3,
     bands: int = 4,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
 ) -> DataFrame:
-    """Convenience batch API: probe, then advance the index; returns the
-    pairs MATERIALIZED (bounded by the batch's collision count — a batch
-    emitting millions of pairs means max_hamming/bands are mistuned, not
-    that this collect needs to scale). Streaming callers use
-    ``stream_phash``, which sinks pairs distributed instead."""
-    new_rows = index_rows(media, bands).persist()
-    try:
-        buckets = touched_buckets(new_rows, n_buckets)
-        pairs = probe(
-            spark, index_dir, new_rows, max_hamming, n_buckets, bands,
-            probe_buckets=buckets,
-        )
-        result = spark.createDataFrame(
-            pairs.collect(),
-            schema="id_new long, id_seen long, hamming int, source string",
-        )
-        update(spark, index_dir, new_rows, batch_id, n_buckets, touched=buckets)
-        return result
-    finally:
-        new_rows.unpersist()
+    """Probe, then advance the index; returns the pairs MATERIALIZED (a
+    batch emitting millions of pairs means max_hamming/bands are
+    mistuned, not that this collect needs to scale). Streaming callers
+    use ``stream_phash``, which writes pairs distributed instead."""
+    return index_gate.run_batch(
+        spark, spec(max_hamming, bands), index_dir, media, batch_id, n_buckets
+    )
 
 
 def stream_phash(
@@ -193,35 +144,12 @@ def stream_phash(
     available_now: bool = True,
     max_hamming: int = 3,
     bands: int = 4,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int = silver.DEFAULT_N_BUCKETS,
 ):
-    """Wire the index into Structured Streaming: per trigger, found pairs
-    APPEND to ``pairs_dir`` (distributed parquet log, no driver
-    materialization) and the band index advances — the foreachBatch +
-    checkpoint shape of streaming/dedup_index.py:stream_dedup, so
-    crash/replay semantics are identical (at-least-once appends; readers
-    dedupe on (id_new, id_seen))."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        new_rows = index_rows(batch_df, bands).persist()
-        try:
-            buckets = touched_buckets(new_rows, n_buckets)
-            pairs = probe(
-                spark, index_dir, new_rows, max_hamming, n_buckets, bands,
-                probe_buckets=buckets,
-            )
-            (
-                pairs.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("append")
-                .parquet(pairs_dir)
-            )
-            update(spark, index_dir, new_rows, batch_id, n_buckets, touched=buckets)
-        finally:
-            new_rows.unpersist()
-
-    writer = media_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    """Per trigger, the found pairs go to ``pairs_dir`` (a
+    ``batch_id``-partitioned parquet log) and the band index advances
+    (``index_gate.stream``)."""
+    return index_gate.stream(
+        spark, spec(max_hamming, bands), media_stream, index_dir, pairs_dir,
+        checkpoint_dir, available_now, n_buckets,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -145,16 +145,20 @@ def test_stream_ann_end_to_end(spark, tmp_path):
 
 
 def test_probe_multi_probe_dominates_single(spark, tmp_path):
-    idx = str(tmp_path / "ann_index")
-    ann_index.probe_and_update(
-        spark, idx, _vec_df(spark, VECS[:8]), batch_id=1,
-        k=K, n_planes=2, dim=DIM, n_buckets=8,
-    )
-    new = ann_index.index_rows(_vec_df(spark, VECS[8:]), n_planes=2, dim=DIM)
-    single = ann_index.probe(spark, idx, new, k=K, n_planes=2, n_buckets=8)
-    multi = ann_index.probe(
-        spark, idx, new, k=K, n_planes=2, n_buckets=8, multi_probe=True
-    )
+    # the same index state probed both ways, each through the gate's own
+    # bucket read (multi-probe reads the fanned-out bucket set)
+    found = {}
+    for multi_probe in (False, True):
+        idx = str(tmp_path / f"ann_index_{multi_probe}")
+        ann_index.probe_and_update(
+            spark, idx, _vec_df(spark, VECS[:8]), batch_id=1,
+            k=K, n_planes=2, dim=DIM, n_buckets=8,
+        )
+        found[multi_probe] = ann_index.probe_and_update(
+            spark, idx, _vec_df(spark, VECS[8:]), batch_id=2,
+            k=K, n_planes=2, dim=DIM, n_buckets=8, multi_probe=multi_probe,
+        )
+    single, multi = found[False], found[True]
     s = {(r["q_id"], r["c_id"]) for r in single.collect()}
     m = {(r["q_id"], r["c_id"]) for r in multi.collect()}
     # multi-probe scores a superset of candidates -> per-query best-k

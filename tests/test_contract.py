@@ -179,6 +179,18 @@ def test_fingerprint_invalidation_fronts_changed_queries():
     assert query_fingerprint(fn, ORACLES["f1_eq_filter"]) != query_fingerprint(
         fn, ORACLES["f1_eq_filter"] + " -- changed"
     )
+    # ... and when a module the query imports by dotted path changes
+    # (``from ..streaming.phash_index import stream_phash``)
+    from django_indexer_spark.plans import query_fingerprint as qf
+
+    fn, oracle = QUERIES["s_stream_phash_index"], ORACLES["s_stream_phash_index"]
+    path = qf._module_files()["phash_index"][0]
+    before, saved = query_fingerprint(fn, oracle), qf._file_hash(path)
+    qf._FILE_HASHES[path] = "0" * 64
+    try:
+        assert query_fingerprint(fn, oracle) != before
+    finally:
+        qf._FILE_HASHES[path] = saved
     # the committed record matches HEAD for every name it contains that
     # parity_check verified (the file is refreshed on PASS; a mismatch
     # here means a query changed without re-running local parity)
