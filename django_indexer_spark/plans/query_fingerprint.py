@@ -16,7 +16,12 @@ The fix: fingerprint what each registry query actually executes —
   counts by its last component; ambiguous leaf names like ``windows``,
   which exists in both operators/ and streaming/, hash BOTH files:
   over-invalidation just re-verifies, under-invalidation hides a
-  change). Modules reached only through another module are not hashed.
+  change),
+- the full text of every package module those modules reach through
+  relative imports (``from .x import y``, ``from ..sources import
+  silver``), transitively: a change to ``streaming/index_gate.py``
+  moves every query that names ``dedup_index``, ``ann_index`` or
+  ``phash_index``.
 
 ``tools/query_hashes.json`` stores the fingerprint recorded at the
 last LOCAL VERIFICATION (tools/parity_check.py updates it only for
@@ -28,6 +33,8 @@ next correctness budget.
 
 from __future__ import annotations
 
+import ast
+import functools
 import hashlib
 import inspect
 import json
@@ -43,18 +50,41 @@ def _module_files() -> dict[str, list[str]]:
     """Leaf module name → all matching package files (a leaf name can
     exist in several subpackages; include every match)."""
     out: dict[str, list[str]] = {}
-    for sub in _SUBPACKAGES:
-        d = os.path.join(_PKG, sub)
-        if not os.path.isdir(d):
-            continue
+    for d in [os.path.join(_PKG, sub) for sub in _SUBPACKAGES] + [_PKG]:
         for fn in sorted(os.listdir(d)):
             if fn.endswith(".py") and fn != "__init__.py":
                 out.setdefault(fn[:-3], []).append(os.path.join(d, fn))
-    for fn in ("schemas.py", "tables.py", "caching.py", "session.py"):
-        p = os.path.join(_PKG, fn)
-        if os.path.exists(p):
-            out.setdefault(fn[:-3], []).append(p)
     return out
+
+
+def _relative_imports(path: str) -> list[str]:
+    """Package files ``path`` imports with ``from .``/``from ..``: the
+    named module, or each imported name that is a module."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level:
+            base = path
+            for _ in range(node.level):
+                base = os.path.dirname(base)
+            target = os.path.join(base, *(node.module or "").split("."))
+            for mod in [target] + [os.path.join(target, a.name) for a in node.names]:
+                if os.path.isfile(mod + ".py"):
+                    out.append(mod + ".py")
+    return out
+
+
+@functools.cache
+def _closure(path: str) -> frozenset[str]:
+    """``path`` and every package file it reaches through relative
+    imports, transitively."""
+    seen, todo = {path}, [path]
+    while todo:
+        new = set(_relative_imports(todo.pop())) - seen
+        seen |= new
+        todo += new
+    return frozenset(seen)
 
 
 _FILE_HASHES: dict[str, str] = {}
@@ -78,9 +108,10 @@ def query_fingerprint(fn, oracle: str | None) -> str:
     parts = [src, oracle or ""]
     mods = _module_files()
     leaves = {name.rsplit(".", 1)[-1] for name in fn.__code__.co_names}
-    for ref in sorted(leaves & set(mods)):
-        for path in mods[ref]:
-            parts.append(_file_hash(path))
+    named = [path for ref in sorted(leaves & set(mods)) for path in mods[ref]]
+    reached = set().union(*map(_closure, named))
+    for path in named + sorted(reached - set(named)):
+        parts.append(_file_hash(path))
     return hashlib.sha256("\x00".join(parts).encode()).hexdigest()
 
 

@@ -150,21 +150,7 @@ def cdc_apply(
         )
     if op_col not in changes.columns:
         raise ValueError(f"changes is missing op column {op_col!r}")
-    ch = changes.withColumn("__src", F.lit(1))
-    if snapshot is None:
-        all_rows = ch
-    else:
-        all_rows = snapshot.withColumn(op_col, F.lit("I")).withColumn(
-            "__src", F.lit(0)
-        ).unionByName(ch)
-    w = Window.partitionBy(*natural_key).orderBy(
-        F.col(version_col).desc_nulls_last(), F.col("__src").desc()
-    )
-    keep = F.col("__rn") == 1
-    if not retain_tombstones:
-        keep = keep & (F.col(op_col) != delete_op)
-    return (
-        all_rows.withColumn("__rn", F.row_number().over(w))
-        .filter(keep)
-        .drop("__rn", "__src")
-    )
+    if snapshot is not None:
+        snapshot = snapshot.withColumn(op_col, F.lit("I"))
+    out = upsert(snapshot, changes, natural_key, version_col, keep="last")
+    return out if retain_tombstones else out.filter(F.col(op_col) != delete_op)

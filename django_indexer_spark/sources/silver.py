@@ -15,12 +15,14 @@ trigger O(batch size + touched buckets) and removes the truncation window:
   materialization pattern as the IVF centroids);
 - every rewrite lands in a NEW versioned directory
   (``__b={bucket}/__v={batch_id}``, hive-style, with names no table
-  column uses); nothing is ever deleted in place. Readers assemble the
-  table from one small JSON manifest mapping bucket -> current version
-  and holding the table's Spark schema, so opening a snapshot infers
-  nothing from parquet footers (as Delta does), and every current
-  version dir sits under the one table root, so opening is ONE parquet
-  scan;
+  column uses); nothing is ever deleted in place. The ``__b=`` directory
+  is the only place a row's bucket is stored (no data file carries it,
+  as Delta keeps partition values in the path and the log). Readers
+  assemble the table from one small JSON manifest mapping bucket ->
+  current version and holding the table's Spark schema, so opening a
+  snapshot infers nothing from parquet footers (as Delta does), and
+  every current version dir sits under the one table root, so opening
+  is ONE parquet scan;
 - publishing is an atomic ``os.replace`` of that one manifest file. A
   crash anywhere — mid-staging, mid-rename, mid-GC — leaves the previous
   manifest pointing at fully-written directories, so there is NO state in
@@ -67,7 +69,6 @@ from pyspark.sql.types import StructType
 from .merge import upsert
 
 MANIFEST = "manifest.json"
-BUCKET_COL = "__bucket"
 # hive-style directory levels below the table dir; no table column uses them
 BUCKET_DIR = "__b"
 VERSION_DIR = "__v"
@@ -80,20 +81,24 @@ def bucket_expr(natural_key: list[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in natural_key]), F.lit(n_buckets))
 
 
-def _manifest_path(table_dir: str) -> str:
-    return os.path.join(table_dir, MANIFEST)
+def buckets_of(df: DataFrame, cols: list[str], n_buckets: int) -> list[int]:
+    """Sorted distinct ``bucket_expr(cols, n_buckets)`` of ``df``'s rows:
+    one bounded collect of at most ``n_buckets`` small values."""
+    bucket = bucket_expr(cols, n_buckets)
+    return sorted(r[0] for r in df.select(bucket).distinct().collect())
+
+
+def _manifest_path(table_dir: str, at_batch: int | None = None) -> str:
+    """The current manifest, or the snapshot manifest of ``at_batch``."""
+    name = MANIFEST if at_batch is None else f"manifest-v{at_batch}.json"
+    return os.path.join(table_dir, name)
 
 
 def read_manifest(table_dir: str, at_batch: int | None = None) -> dict | None:
     """Current manifest, or — with ``at_batch`` — the retained snapshot
     manifest published by that batch (None if never written or vacuumed)."""
-    path = (
-        _manifest_path(table_dir)
-        if at_batch is None
-        else os.path.join(table_dir, f"manifest-v{at_batch}.json")
-    )
     try:
-        with open(path) as f:
+        with open(_manifest_path(table_dir, at_batch)) as f:
             return json.load(f)
     except (FileNotFoundError, NotADirectoryError):
         return None
@@ -128,11 +133,10 @@ def _snapshot_paths(table_dir: str) -> set[str]:
     return live
 
 
-def _write_manifest_atomic(table_dir: str, manifest: dict) -> None:
-    tmp = _manifest_path(table_dir) + ".tmp"
-    with open(tmp, "w") as f:
+def _write_manifest_atomic(path: str, manifest: dict) -> None:
+    with open(path + ".tmp", "w") as f:
         json.dump(manifest, f)
-    os.replace(tmp, _manifest_path(table_dir))  # POSIX-atomic publish
+    os.replace(path + ".tmp", path)  # POSIX-atomic publish
 
 
 def version_dir(table_dir: str, bucket: int | str, version: int) -> str:
@@ -160,7 +164,8 @@ def current_paths(
 
 
 def _table_schema(table_dir: str, manifest: dict) -> StructType:
-    """The published schema: data columns, ``__bucket``, partition column."""
+    """The published schema, exactly what ``read_table`` returns: the
+    data columns and the partition column (the bucket is only a dir)."""
     if "schema" not in manifest:
         raise ValueError(f"{table_dir}: manifest has no schema — rebuild the table")
     return StructType.fromJson(manifest["schema"])
@@ -170,7 +175,6 @@ def read_table(
     spark: SparkSession,
     table_dir: str,
     buckets: list[int] | None = None,
-    keep_bucket_col: bool = False,
     at_batch: int | None = None,
 ) -> DataFrame | None:
     """Current snapshot of a silver table (None if absent/empty). With
@@ -186,9 +190,10 @@ def read_table(
     Every table, partitioned or not, opens as ONE parquet scan over the
     current version dirs, rooted (``basePath``) at the table dir: every
     level below it is hive-style, so Spark's partition discovery reads
-    the ``__b``/``__v`` layout columns (dropped here) and, for tables
-    created with ``partition_col`` (date-partitioned silver, SURVEY §4's
-    donated_at composite-index mapping), restores the partition column.
+    the ``__b``/``__v`` layout columns (always dropped here: the frame
+    has exactly the manifest's columns) and, for tables created with
+    ``partition_col`` (date-partitioned silver, SURVEY §4's donated_at
+    composite-index mapping), restores the partition column.
     A range predicate on it then prunes FILES in that scan
     (PartitionFilters, guarded by tests/test_storage.py).
     """
@@ -198,12 +203,11 @@ def read_table(
     paths = current_paths(table_dir, manifest, buckets)
     if not paths:
         return None
-    hidden = [BUCKET_DIR, VERSION_DIR] + ([] if keep_bucket_col else [BUCKET_COL])
     return (
         spark.read.schema(_table_schema(table_dir, manifest))
         .option("basePath", table_dir)
         .parquet(*paths)
-        .drop(*hidden)
+        .drop(BUCKET_DIR, VERSION_DIR)
     )
 
 
@@ -246,7 +250,7 @@ def vacuum_history(table_dir: str, keep_last: int = 1) -> list[int]:
     drop = snaps[: max(0, len(snaps) - keep_last)]
     for batch_id in drop:
         try:
-            os.remove(os.path.join(table_dir, f"manifest-v{batch_id}.json"))
+            os.remove(_manifest_path(table_dir, batch_id))
         except FileNotFoundError:
             pass
     return drop
@@ -282,8 +286,11 @@ def merge_batch(
     raises ValueError before any rename, leaving the manifest and the
     version dirs as they were.
 
-    The manifest records the written frame's Spark schema (``schema``);
-    the batch-column check below and every ``read_table`` scan use it.
+    The manifest records the merged frame's Spark schema (``schema``),
+    exactly what ``read_table`` returns: the data columns and the
+    partition column. The bucket id is stored only as the ``__b=``
+    directory — staged with ``partitionBy``, so no data file carries it.
+    The batch-column check below and every ``read_table`` scan use it.
 
     ``evolve_schema=True`` permits ADDITIVE schema evolution: a batch may
     carry columns the table has never seen and may omit columns older
@@ -333,53 +340,42 @@ def merge_batch(
     content. When resetting a checkpoint, either start a new table_dir or
     vacuum_history + vacuum the old one first.
     """
-    inc = incoming.withColumn(
-        BUCKET_COL, bucket_expr(bucket_by or natural_key, n_buckets)
-    )
+    route = bucket_by or natural_key
+    inc = incoming.withColumn(BUCKET_DIR, bucket_expr(route, n_buckets))
     # persist only when WE must collect the touched set (two consumers);
     # with touched_buckets supplied the staged write is the only consumer
     owns_persist = touched_buckets is None
     if owns_persist:
         inc = inc.persist()
     try:
+        # collects the persisted column, not ``buckets_of``: hashing over
+        # the cache runs one more Spark job when the batch is empty, as
+        # most entities of an ingest micro-batch are
         touched = (
-            sorted(r[0] for r in inc.select(BUCKET_COL).distinct().collect())
+            sorted(r[0] for r in inc.select(BUCKET_DIR).distinct().collect())
             if touched_buckets is None
             else sorted(int(b) for b in touched_buckets)
         )
         if not touched:
             return []
         os.makedirs(table_dir, exist_ok=True)
+        # recorded in the manifest and fixed at table creation
+        fixed = {"n_buckets": n_buckets, "partition_col": partition_col, "bucket_by": bucket_by}
         manifest = read_manifest(table_dir)
         known = None if manifest is None else _table_schema(table_dir, manifest)
-        manifest = manifest or {
-            "n_buckets": n_buckets,
-            "buckets": {},
-            **({"partition_col": partition_col} if partition_col else {}),
-            **({"bucket_by": bucket_by} if bucket_by else {}),
-        }
-        if manifest["n_buckets"] != n_buckets:
-            raise ValueError(
-                f"{table_dir}: table has n_buckets={manifest['n_buckets']}, "
-                f"got {n_buckets} — bucket count is fixed at table creation"
-            )
-        if manifest.get("partition_col") != partition_col:
-            raise ValueError(
-                f"{table_dir}: table partition_col="
-                f"{manifest.get('partition_col')!r}, got {partition_col!r} — "
-                "partitioning is fixed at table creation"
-            )
-        if manifest.get("bucket_by") != bucket_by:
-            raise ValueError(
-                f"{table_dir}: table bucket_by={manifest.get('bucket_by')!r}, "
-                f"got {bucket_by!r} — bucket routing is fixed at table creation"
-            )
+        manifest = manifest or {**fixed, "buckets": {}}
+        for field, value in fixed.items():
+            if manifest.get(field) != value:
+                raise ValueError(
+                    f"{table_dir}: table has {field}={manifest.get(field)!r}, got "
+                    f"{value!r} — {field} is fixed at table creation"
+                )
         # schema contract lives in the MANIFEST, not in whichever bucket
         # the batch happens to touch (an empty target bucket must not
         # exempt a drifting batch from the check)
         inc_cols = sorted(incoming.columns)
         if known is not None and not evolve_schema:
-            known_cols = sorted(f.name for f in known if f.name != BUCKET_COL)
+            known_cols = sorted(known.fieldNames())
             if inc_cols != known_cols:
                 raise ValueError(
                     f"{table_dir}: batch columns {inc_cols} != table columns "
@@ -390,38 +386,37 @@ def merge_batch(
         # live anywhere else — the bucket hash is a pure key function).
         # When every touched bucket is new, merge against the empty table
         # so the written frame still carries the columns this batch omits.
-        existing = read_table(spark, table_dir, buckets=touched, keep_bucket_col=True)
+        existing = read_table(spark, table_dir, buckets=touched)
         if existing is None and known is not None:
             existing = spark.createDataFrame([], known)
         merged = upsert(
             existing,
-            inc,
+            inc.drop(BUCKET_DIR),
             natural_key,
             version_col,
             keep=keep,
             allow_missing_columns=evolve_schema,
         )
 
-        # one write job, laid out per bucket. partitionBy drops the layout
-        # column from the data files, so duplicate it: __bp for layout,
-        # __bucket stays as a data column for future bucket-pruned merges.
-        # The repartition hashes rows to one task per bucket BEFORE the
-        # partitioned write — otherwise every write task fragments a file
-        # into every bucket dir it holds rows for (tasks x buckets small
-        # files per trigger; with it, one file per bucket version). The
-        # shuffle moves only the touched buckets' rows.
+        # one write job, laid out per bucket: the bucket id is computed
+        # (a pure key hash) under its directory name, and partitionBy
+        # keeps it out of the data files. The repartition hashes rows to one task per bucket
+        # BEFORE the partitioned write — otherwise every write task
+        # fragments a file into every bucket dir it holds rows for (tasks x
+        # buckets small files per trigger; with it, one file per bucket
+        # version). The shuffle moves only the touched buckets' rows.
         staging = os.path.join(table_dir, f".staging-v{batch_id}")
         shutil.rmtree(staging, ignore_errors=True)  # retry hygiene
-        layout = ["__bp"] + ([partition_col] if partition_col else [])
         (
-            merged.repartition(len(touched), F.col(BUCKET_COL))
-            .withColumn("__bp", F.col(BUCKET_COL))
-            .write.partitionBy(*layout)
+            merged.withColumn(BUCKET_DIR, bucket_expr(route, n_buckets))
+            .repartition(len(touched), F.col(BUCKET_DIR))
+            .write.partitionBy(BUCKET_DIR, *([partition_col] if partition_col else []))
             .mode("overwrite")
             .parquet(staging)
         )
+        staged = {b: os.path.join(staging, f"{BUCKET_DIR}={b}") for b in touched}
         # only a caller-supplied superset leaves a touched bucket unstaged
-        missing = [b for b in touched if not os.path.isdir(f"{staging}/__bp={b}")]
+        missing = [b for b, src in staged.items() if not os.path.isdir(src)]
         if missing:
             shutil.rmtree(staging, ignore_errors=True)
             raise ValueError(f"{table_dir}: touched_buckets {missing} hold no rows")
@@ -429,8 +424,7 @@ def merge_batch(
         # move staged bucket dirs into place as NEW versions (pure renames;
         # current versions remain untouched and referenced by the manifest)
         prev = {str(b): manifest["buckets"].get(str(b)) for b in touched}
-        for b in touched:
-            src = os.path.join(staging, f"__bp={b}")
+        for b, src in staged.items():
             dst = version_dir(table_dir, b, batch_id)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
             # dst can pre-exist only when THIS batch_id is being retried
@@ -444,24 +438,19 @@ def merge_batch(
         new_buckets = dict(manifest["buckets"])
         new_buckets.update({str(b): batch_id for b in touched})
         published = {
-            "n_buckets": n_buckets,
+            **fixed,
             "buckets": new_buckets,
             "last_batch_id": batch_id,
             "schema": merged.schema.jsonValue(),
-            **({"partition_col": partition_col} if partition_col else {}),
-            **({"bucket_by": bucket_by} if bucket_by else {}),
         }
-        _write_manifest_atomic(table_dir, published)
+        _write_manifest_atomic(_manifest_path(table_dir), published)
 
         if retain_history:
             # snapshot AFTER the main publish: a crash in between leaves a
             # consistent current table, merely missing one history entry
             # (the retry re-publishes both). Old bucket versions stay —
             # prior snapshots reference them.
-            tmp = os.path.join(table_dir, f"manifest-v{batch_id}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(published, f)
-            os.replace(tmp, os.path.join(table_dir, f"manifest-v{batch_id}.json"))
+            _write_manifest_atomic(_manifest_path(table_dir, batch_id), published)
         else:
             # GC strictly after the swap: failures leave garbage, not loss.
             # Only versions no snapshot references (mixed-mode tables keep

@@ -11,7 +11,7 @@ below is defined here once:
 
 1. build and persist the batch's index rows (``spec.rows``);
 2. collect the batch's physical buckets once,
-   ``silver.bucket_expr(spec.bucket_by, n_buckets)``;
+   ``silver.buckets_of(rows, spec.bucket_by, n_buckets)``;
 3. open the probed buckets (the step-2 set, or ``spec.probe_rows``'s
    wider set) with ``silver.read_table(buckets=...)``, keeping only rows
    with ``version < batch_id``;
@@ -62,11 +62,6 @@ class IndexSpec:
     probe_rows: Callable[[DataFrame], DataFrame] | None = None
 
 
-def _buckets(rows: DataFrame, bucket_by: list[str], n_buckets: int) -> list[int]:
-    bucket_of = silver.bucket_expr(bucket_by, n_buckets)
-    return sorted(r[0] for r in rows.select(bucket_of.alias("b")).distinct().collect())
-
-
 def run_batch(
     spark: SparkSession, spec: IndexSpec, index_dir: str, batch_df: DataFrame,
     batch_id: int, n_buckets: int, log_dir: str | None = None,
@@ -77,10 +72,10 @@ def run_batch(
     size, the batch API's contract)."""
     rows = spec.rows(batch_df).persist()
     try:
-        touched = _buckets(rows, spec.bucket_by, n_buckets)
+        touched = silver.buckets_of(rows, spec.bucket_by, n_buckets)
         read = touched
         if spec.probe_rows is not None:
-            read = _buckets(spec.probe_rows(rows), spec.bucket_by, n_buckets)
+            read = silver.buckets_of(spec.probe_rows(rows), spec.bucket_by, n_buckets)
         existing = silver.read_table(spark, index_dir, buckets=read)
         if existing is not None:
             existing = existing.filter(F.col("version") < F.lit(batch_id))

@@ -11,6 +11,8 @@
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -18,6 +20,7 @@ from django_indexer_spark.plans.fixture_queries import QUERIES
 from django_indexer_spark.plans.oracles import ORACLES
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -90,7 +93,8 @@ def test_bench_emits_valid_json_line(tmp_path):
         SPARK_GRAFT_BENCH_DETAIL=str(tmp_path / "bench_detail.json"),
     )
     r = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"], capture_output=True, text=True, env=env,
+        [sys.executable, os.path.join(REPO, "bench.py")], capture_output=True, text=True,
+        env=env,
         # 900 s: the registry reached 246 queries (9 of them real
         # streaming micro-batch runs) and this test shares the machine
         # with four parallel pytest batches — 480 s flaked at 246
@@ -179,18 +183,24 @@ def test_fingerprint_invalidation_fronts_changed_queries():
     assert query_fingerprint(fn, ORACLES["f1_eq_filter"]) != query_fingerprint(
         fn, ORACLES["f1_eq_filter"] + " -- changed"
     )
-    # ... and when a module the query imports by dotted path changes
-    # (``from ..streaming.phash_index import stream_phash``)
+    # ... when a module the query imports by dotted path changes
+    # (``from ..streaming.phash_index import stream_phash``), and when a
+    # module reached only through that module's relative imports changes
+    # (``streaming/index_gate.py`` runs every micro-batch of dedup_index)
     from django_indexer_spark.plans import query_fingerprint as qf
 
-    fn, oracle = QUERIES["s_stream_phash_index"], ORACLES["s_stream_phash_index"]
-    path = qf._module_files()["phash_index"][0]
-    before, saved = query_fingerprint(fn, oracle), qf._file_hash(path)
-    qf._FILE_HASHES[path] = "0" * 64
-    try:
-        assert query_fingerprint(fn, oracle) != before
-    finally:
-        qf._FILE_HASHES[path] = saved
+    for name, module in (
+        ("s_stream_phash_index", "phash_index"),
+        ("s_stream_dedup_index", "index_gate"),
+    ):
+        fn, oracle = QUERIES[name], ORACLES[name]
+        path = qf._module_files()[module][0]
+        before, saved = query_fingerprint(fn, oracle), qf._file_hash(path)
+        qf._FILE_HASHES[path] = "0" * 64
+        try:
+            assert query_fingerprint(fn, oracle) != before, name
+        finally:
+            qf._FILE_HASHES[path] = saved
     # the committed record matches HEAD for every name it contains that
     # parity_check verified (the file is refreshed on PASS; a mismatch
     # here means a query changed without re-running local parity)

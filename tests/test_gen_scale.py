@@ -14,7 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/.scaling/sf1"
+DST = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scaling", "sf1")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()

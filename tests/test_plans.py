@@ -8,12 +8,15 @@ not the cluster.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from django_indexer_spark.plans.fixture_queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def plan_of(spark, name: str) -> str:
@@ -135,7 +138,9 @@ def test_coverage_doc_mentions_every_query():
     import sys
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/coverage_check.py"], capture_output=True, text=True
+        [sys.executable, os.path.join(REPO, "tools", "coverage_check.py")],
+        capture_output=True,
+        text=True,
     )
     assert r.returncode == 0, r.stdout + r.stderr
 

@@ -44,6 +44,21 @@ def _fields(df):
     return {f.name: f.dataType for f in df.schema}
 
 
+def _file_columns(silver, d):
+    """Column names in the parquet footers of the table's current files."""
+    import pyarrow.parquet as pq
+
+    files = [
+        os.path.join(root, f)
+        for v in silver.current_paths(d, silver.read_manifest(d))
+        for root, _, fs in os.walk(v)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert files
+    return {name for f in files for name in pq.read_schema(f).names}
+
+
 def test_write_clustered_partitions_prune_and_cluster_sorts(spark, tmp_path):
     out = str(tmp_path / "donations_gold")
     df = spark.range(0, 1000).select(
@@ -170,10 +185,10 @@ def test_silver_date_partition_prunes_files(spark, tmp_path):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan parquet") == 1, plan
         assert "Union" not in plan, plan
-    assert _manifest_fields(silver, d) == _fields(
-        silver.read_table(spark, d, keep_bucket_col=True)
-    )
+    assert _manifest_fields(silver, d) == _fields(silver.read_table(spark, d))
     assert t.columns[-1] == "donated_date"  # restored by partition discovery
+    # the bucket id is stored only as the __b= dir: no data file carries it
+    assert not {"__bucket", "__bp", "__b"} & _file_columns(silver, d)
 
     # range predicate prunes: PartitionFilters in every scan + only
     # matching dirs' files are touched
@@ -262,9 +277,7 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
     t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
     assert jobs == []
     assert "currency" in t.columns  # superset schema across old buckets
-    assert _manifest_fields(silver, d) == _fields(
-        silver.read_table(spark, d, keep_bucket_col=True)
-    )
+    assert _manifest_fields(silver, d) == _fields(silver.read_table(spark, d))
     got = {r["k"]: (r["amount"], r["currency"]) for r in t.collect()}
     assert got == {"k1": (11, "usd"), "k2": (20, None), "k3": (30, None)}
 
@@ -288,11 +301,10 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
     )
     t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
     assert jobs == []
-    assert _manifest_fields(silver, d) == _fields(
-        silver.read_table(spark, d, keep_bucket_col=True)
-    )
+    assert _manifest_fields(silver, d) == _fields(silver.read_table(spark, d))
     got = {r["k"]: (r["amount"], r["currency"]) for r in t.collect()}
     assert got == {"k1": (11, "usd"), "k2": (None, "eur"), "k3": (30, None)}
+    assert not {"__bucket", "__bp", "__b"} & _file_columns(silver, d)
 
     # a batch landing only in a NEW bucket and omitting a column keeps
     # that column in the published schema
@@ -333,6 +345,36 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
         json.dump(m, f)
     with _pytest.raises(ValueError, match="evolving: manifest has no schema"):
         silver.read_table(spark, d)
+
+
+def test_silver_bucket_layout_is_fixed_at_creation(spark, tmp_path):
+    """n_buckets and bucket_by are recorded at table creation: a merge
+    that names a different value raises, naming the field, before it
+    stages or publishes anything."""
+    import pytest as _pytest
+
+    from django_indexer_spark.sources import silver
+
+    d = str(tmp_path / "bands")
+    rows = spark.createDataFrame(
+        [("a", "x", 1), ("b", "y", 1)], "k string, band string, version long"
+    )
+    silver.merge_batch(
+        spark, d, rows, ["k"], "version", batch_id=1, n_buckets=4, bucket_by=["band"]
+    )
+    manifest = silver.read_manifest(d)
+    listing = sorted((root, sorted(dirs), sorted(fs)) for root, dirs, fs in os.walk(d))
+    for field, layout in (
+        ("n_buckets", {"n_buckets": 8, "bucket_by": ["band"]}),
+        ("bucket_by", {"n_buckets": 4, "bucket_by": ["k"]}),
+        ("bucket_by", {"n_buckets": 4}),
+    ):
+        with _pytest.raises(ValueError, match=f"{field}="):
+            silver.merge_batch(spark, d, rows, ["k"], "version", batch_id=2, **layout)
+        assert silver.read_manifest(d) == manifest
+        assert sorted(
+            (root, sorted(dirs), sorted(fs)) for root, dirs, fs in os.walk(d)
+        ) == listing
 
 
 def test_zorder_layout_prunes_on_non_leading_column(spark, tmp_path):

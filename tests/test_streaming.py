@@ -213,10 +213,10 @@ def test_silver_merge_rewrites_only_touched_buckets(spark, tmp_path):
     # the merge's existing-scan is bucket-pruned BY CONSTRUCTION: reading
     # the touched bucket lists only that bucket's files (this is the
     # "second micro-batch reads only touched partitions" guarantee)
-    pruned = silver.read_table(spark, d, buckets=touched, keep_bucket_col=True)
+    pruned = silver.read_table(spark, d, buckets=touched)
     files = pruned.inputFiles()
     assert files and all(f"{silver.version_dir(d, touched[0], 2)}/" in f for f in files)
-    full = silver.read_table(spark, d, keep_bucket_col=True)
+    full = silver.read_table(spark, d)
     assert len(full.inputFiles()) > len(files)
 
     out = {r["k"]: (r["v"], r["version"]) for r in silver.read_table(spark, d).collect()}
@@ -508,7 +508,7 @@ def test_silver_vacuum_removes_only_unreferenced_dirs(spark, tmp_path):
     )
     before = {r["k"]: (r["v"], r["version"]) for r in silver.read_table(spark, d).collect()}
     # plant crash debris: an abandoned staging dir and an orphan version
-    os.makedirs(os.path.join(d, ".staging-v99", "__bp=0"))
+    os.makedirs(os.path.join(d, ".staging-v99", "__b=0"))
     some_bucket = next(iter(silver.read_manifest(d)["buckets"]))
     orphan = silver.version_dir(d, some_bucket, 99)
     os.makedirs(orphan)

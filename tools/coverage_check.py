@@ -8,16 +8,18 @@ Usage: python tools/coverage_check.py
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from django_indexer_spark.plans.fixture_queries import QUERIES
 from django_indexer_spark.plans.oracles import ORACLES
 
 
 def main() -> int:
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(REPO, "COVERAGE.md")).read()
     mentioned = set(re.findall(r"`([a-z0-9_]+)`", text))
     rc = 0
 

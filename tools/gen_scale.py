@@ -4,7 +4,7 @@ The driver ships fixtures up to sf0.1; the scaling sweep (SCALING.md)
 needs one more decade to show the worst-ratio queries' curves when DATA,
 not fixed overhead, dominates (round-5 verdict next-#4). This tool
 builds sf1 (10x sf0.1: 6M lineitem / 1.5M orders / 1M events) under
-/root/repo/.scaling/sf1 — never touching /root/testdata — by stamping
+.scaling/sf1 in the checkout — never touching the source fixtures — by stamping
 10 key-shifted replicas of every sf0.1 table:
 
 - keys shift by replica*10^9 per key family, preserving referential
@@ -26,7 +26,7 @@ Only used for performance measurement — correctness gates stay on the
 driver-generated /root/testdata fixtures.
 
 Usage: python tools/gen_scale.py [src_sf_dir] [dst_dir] [multiplier]
-       defaults: /root/testdata/sf0.1 /root/repo/.scaling/sf1 10
+       defaults: the sf0.1 driver fixture, .scaling/sf1 in the checkout, 10
 """
 
 from __future__ import annotations
@@ -36,12 +36,13 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SHIFT = 10**9  # key shift per replica — far above any sf0.1 key
 
 
 def main() -> int:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scaling/sf1"
+    dst = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scaling", "sf1")
     mult = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     os.makedirs(dst, exist_ok=True)
     con = duckdb.connect()

@@ -23,9 +23,11 @@ Usage: python tools/plan_audit.py [sf_dir] > /dev/null  (writes PLAN_AUDIT.md)
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from django_indexer_spark.session import get_spark
 
@@ -92,13 +94,13 @@ def main() -> int:
     if errors:
         out.append("\n## Planning errors\n")
         out += [f"- {n}: {e}" for n, e in errors]
-    with open("/root/repo/PLAN_AUDIT.md", "w") as f:
+    with open(os.path.join(REPO, "PLAN_AUDIT.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     if write_budgets:
         import json
 
         budgets = {n: a for n, a in rows if "error" not in a}
-        with open("/root/repo/tools/plan_budgets.json", "w") as f:
+        with open(os.path.join(REPO, "tools", "plan_budgets.json"), "w") as f:
             json.dump(budgets, f, indent=1, sort_keys=True)
         print(f"wrote plan_budgets.json for {len(budgets)} queries")
     print(f"{len(rows)} queries audited, {len(errors)} errors, "

@@ -28,10 +28,12 @@ Usage: python tools/scaling_probe.py [superlinear_threshold=14]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = ["0.001", "0.01", "0.1"]
 
@@ -72,7 +74,7 @@ def main() -> int:
         "superlinear_threshold": threshold,
         "flagged": [r[0] for r in flagged],
     }
-    with open("/root/repo/SCALING.json", "w") as f:
+    with open(os.path.join(REPO, "SCALING.json"), "w") as f:
         json.dump(out_json, f, indent=1, sort_keys=True)
 
     md = [
@@ -98,7 +100,7 @@ def main() -> int:
             f"| {name} | {t1:.3f} | {t2:.3f} | {t3:.3f} | "
             f"{r_mid:.1f} | {r_top:.1f} |"
         )
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write("\n".join(md) + "\n")
 
     print(

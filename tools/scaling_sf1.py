@@ -8,7 +8,7 @@ show the ratios stay ≈ linear when data, not overhead, dominates
 (next-#4). This tool:
 
 1. expects the sf1 fixture from tools/gen_scale.py (10x key-shifted
-   sf0.1 — /root/repo/.scaling/sf1);
+   sf0.1 — .scaling/sf1 in the checkout);
 2. takes the N worst queries by r10 from the committed SCALING.json;
 3. re-times each at sf0.1 (fresh, same session — so the r100 ratio
    compares like with like) and at sf1, steady-state min-of-2 with a
@@ -23,18 +23,20 @@ Usage: python tools/scaling_sf1.py [n_queries=12] [sf1_dir] [threshold=14]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
     n_queries = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    sf1_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scaling/sf1"
+    sf1_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scaling", "sf1")
     threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 14.0
 
-    with open("/root/repo/SCALING.json") as f:
+    with open(os.path.join(REPO, "SCALING.json")) as f:
         base = json.load(f)
     times = base["times"]
     by_r10 = sorted(
@@ -76,7 +78,7 @@ def main() -> int:
         "flagged": [r[0] for r in flagged],
         "threshold": threshold,
     }
-    with open("/root/repo/SCALING.json", "w") as f:
+    with open(os.path.join(REPO, "SCALING.json"), "w") as f:
         json.dump(base, f, indent=1, sort_keys=True)
 
     md = [
@@ -99,12 +101,12 @@ def main() -> int:
     for name, t01, t1, r100 in rows:
         md.append(f"| {name} | {t01:.3f} | {t1:.3f} | {r100:.1f} |")
 
-    with open("/root/repo/SCALING.md") as f:
+    with open(os.path.join(REPO, "SCALING.md")) as f:
         content = f.read()
     marker = "\n## sf1 decade"
     if marker in content:
         content = content[: content.index(marker)]
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
         f.write(content.rstrip("\n") + "\n" + "\n".join(md) + "\n")
 
     print(
