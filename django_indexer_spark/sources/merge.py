@@ -35,7 +35,6 @@ def upsert(
     natural_key: list[str],
     version_col: str,
     keep: str = "last",
-    allow_missing_columns: bool = False,
 ) -> DataFrame:
     """Merge of ``incoming`` into ``existing`` keyed on the natural key.
 
@@ -44,12 +43,8 @@ def upsert(
     keep='first' → first-writer-wins: bulk_create(ignore_conflicts=True)
                    semantics (utils.py:427-431); existing rows survive.
 
-    Both frames must share a schema including ``version_col`` — unless
-    ``allow_missing_columns`` (additive schema evolution: a column
-    present on one side only reads as NULL on the other, so a batch that
-    ADDS a column merges against pre-evolution state; note the winner's
-    row is taken whole, so an incoming row missing a column nulls it on
-    overwrite — versioned-row semantics, not per-column patch).
+    Both frames must have the same column names, ``version_col`` among
+    them (matched by name; the winner's row is taken whole).
     """
     if keep not in ("last", "first"):
         raise ValueError(f"keep must be 'last' or 'first', got {keep!r}")
@@ -57,9 +52,7 @@ def upsert(
     if existing is None:
         all_rows = inc
     else:
-        all_rows = existing.withColumn("__src", F.lit(0)).unionByName(
-            inc, allowMissingColumns=allow_missing_columns
-        )
+        all_rows = existing.withColumn("__src", F.lit(0)).unionByName(inc)
     if keep == "last":
         order = [F.col(version_col).desc_nulls_last(), F.col("__src").desc()]
     else:

@@ -24,11 +24,13 @@ trigger O(batch size + touched buckets) and removes the truncation window:
   every current version dir sits under the one table root, so opening
   is ONE parquet scan;
 - publishing is an atomic ``os.replace`` of that one manifest file. A
-  crash anywhere — mid-staging, mid-rename, mid-GC — leaves the previous
-  manifest pointing at fully-written directories, so there is NO state in
-  which the table is truncated or half-visible. The retried micro-batch
-  (Structured Streaming re-runs the same batch_id) re-merges idempotently
-  (keyed + versioned, T3) and re-publishes the same result;
+  crash anywhere — mid-staging, mid-rename, at the publish, mid-GC —
+  leaves the old or the new manifest pointing at fully-written
+  directories, so there is NO state in which the table is truncated or
+  half-visible. The retried micro-batch (Structured Streaming re-runs
+  the same batch_id) re-merges idempotently (keyed + versioned, T3) and
+  re-publishes the same result, never touching a dir the manifest
+  references (tests/test_streaming.py crashes each step);
 - superseded version dirs are garbage-collected only AFTER the swap;
   a crash during GC leaves stray unreferenced dirs, never corruption.
 
@@ -46,14 +48,11 @@ for the table's life (changing it is a full rewrite, as with any bucketed
 layout). Readers get bucket-pruned point lookups for free:
 ``read_table(..., buckets=[bucket_of(key)])``.
 
-Time travel: with ``merge_batch(..., retain_history=True)`` each publish
-also snapshots the manifest as ``manifest-v{batch_id}.json`` and skips
-bucket-version GC, so ``read_table(..., at_batch=N)`` reconstructs the
-table exactly as of batch N (snapshot isolation by construction — old
-bucket dirs are immutable and still referenced). Storage grows by the
-rewritten buckets per retained batch; ``vacuum_history(keep_last=k)``
-drops old snapshots and ``vacuum`` (which honors snapshot references)
-reclaims their dirs — the Delta/Iceberg VACUUM + RETAIN shape.
+The store keeps exactly the modes the pipeline runs, as the reference's
+keyed Postgres upserts do (indexer_app/utils.py:427-431, 978-982): one
+current snapshot per table (no time travel — a superseded bucket version
+is deleted right after the publish) and one fixed set of column names
+(no schema evolution — a batch whose columns differ raises).
 """
 
 from __future__ import annotations
@@ -89,48 +88,20 @@ def buckets_of(df: DataFrame, cols: list[str], n_buckets: int) -> list[int]:
 
 
 def _manifest_path(table_dir: str, at_batch: int | None = None) -> str:
-    """The current manifest, or the snapshot manifest of ``at_batch``."""
+    """The current manifest, or the ``manifest-v{at_batch}.json`` file
+    that older stores kept per batch (no code writes one any more)."""
     name = MANIFEST if at_batch is None else f"manifest-v{at_batch}.json"
     return os.path.join(table_dir, name)
 
 
 def read_manifest(table_dir: str, at_batch: int | None = None) -> dict | None:
-    """Current manifest, or — with ``at_batch`` — the retained snapshot
-    manifest published by that batch (None if never written or vacuumed)."""
+    """Current manifest (None if never published); ``at_batch`` names a
+    per-batch manifest file instead (see ``_manifest_path``)."""
     try:
         with open(_manifest_path(table_dir, at_batch)) as f:
             return json.load(f)
     except (FileNotFoundError, NotADirectoryError):
         return None
-
-
-def history(table_dir: str) -> list[int]:
-    """Batch ids with a retained snapshot manifest, ascending."""
-    try:
-        entries = os.listdir(table_dir)
-    except (FileNotFoundError, NotADirectoryError):
-        return []
-    out = []
-    for e in entries:
-        if e.startswith("manifest-v") and e.endswith(".json"):
-            suffix = e[len("manifest-v") : -len(".json")]
-            # tolerate stray files (hand-copied backups like
-            # manifest-v3.json.bak→…-v3-old.json): a non-integer suffix is
-            # not a snapshot, and one such file must not break every
-            # read_table/vacuum/merge_batch on the table
-            if suffix.isdigit() or (suffix.startswith("-") and suffix[1:].isdigit()):
-                out.append(int(suffix))
-    return sorted(out)
-
-
-def _snapshot_paths(table_dir: str) -> set[str]:
-    """Version dirs referenced by any retained snapshot manifest."""
-    live: set[str] = set()
-    for batch_id in history(table_dir):
-        snap = read_manifest(table_dir, at_batch=batch_id)
-        if snap:
-            live |= set(current_paths(table_dir, snap))
-    return live
 
 
 def _write_manifest_atomic(path: str, manifest: dict) -> None:
@@ -175,17 +146,13 @@ def read_table(
     spark: SparkSession,
     table_dir: str,
     buckets: list[int] | None = None,
-    at_batch: int | None = None,
 ) -> DataFrame | None:
     """Current snapshot of a silver table (None if absent/empty). With
     ``buckets``, reads only those bucket dirs — partition pruning by
     construction: unrequested buckets never appear in the scan's file list.
-    With ``at_batch``, time-travel: read the table as of that retained
-    batch's snapshot manifest (requires merge_batch(retain_history=True)).
 
     Every scan takes the manifest's schema: opening reads no parquet
-    footer and runs no Spark job; bucket versions older than an additive
-    schema evolution read the newer columns as NULL.
+    footer and runs no Spark job.
 
     Every table, partitioned or not, opens as ONE parquet scan over the
     current version dirs, rooted (``basePath``) at the table dir: every
@@ -197,7 +164,7 @@ def read_table(
     A range predicate on it then prunes FILES in that scan
     (PartitionFilters, guarded by tests/test_storage.py).
     """
-    manifest = read_manifest(table_dir, at_batch=at_batch)
+    manifest = read_manifest(table_dir)
     if manifest is None or not manifest["buckets"]:
         return None
     paths = current_paths(table_dir, manifest, buckets)
@@ -212,20 +179,18 @@ def read_table(
 
 
 def vacuum(table_dir: str) -> list[str]:
-    """Remove everything no manifest references: version dirs orphaned by
-    a crash between publish and GC, version dirs whose only references
-    were vacuumed snapshots, and abandoned staging dirs. Liveness is the
-    UNION of the current manifest and every retained snapshot manifest,
-    so time-travel reads never lose their files. Safe at any point
-    BETWEEN merges (manifests are the readers' single source of truth,
-    so unreferenced dirs are invisible) — but not concurrently with an
-    active writer, whose staging dir is not yet referenced by design
-    (single-writer assumption, as with any pointer-commit table format).
+    """Remove everything the current manifest does not reference: version
+    dirs orphaned by a crash before the publish or during GC, and
+    abandoned staging dirs. Safe at any point BETWEEN merges (the
+    manifest is the readers' single source of truth, so unreferenced
+    dirs are invisible) — but not concurrently with an active writer,
+    whose staging dir is not yet referenced by design (single-writer
+    assumption, as with any pointer-commit table format).
     Returns removed paths."""
     manifest = read_manifest(table_dir)
     if manifest is None:
         return []
-    live = set(current_paths(table_dir, manifest)) | _snapshot_paths(table_dir)
+    live = set(current_paths(table_dir, manifest))
     removed: list[str] = []
     for entry in sorted(os.listdir(table_dir)):
         p = os.path.join(table_dir, entry)
@@ -241,21 +206,6 @@ def vacuum(table_dir: str) -> list[str]:
     return removed
 
 
-def vacuum_history(table_dir: str, keep_last: int = 1) -> list[int]:
-    """Drop all but the newest ``keep_last`` snapshot manifests (the
-    RETAIN knob). Removes only the small manifest files; the bucket dirs
-    they referenced become unreferenced and are reclaimed by the next
-    ``vacuum``. Returns the dropped batch ids."""
-    snaps = history(table_dir)
-    drop = snaps[: max(0, len(snaps) - keep_last)]
-    for batch_id in drop:
-        try:
-            os.remove(_manifest_path(table_dir, batch_id))
-        except FileNotFoundError:
-            pass
-    return drop
-
-
 def merge_batch(
     spark: SparkSession,
     table_dir: str,
@@ -265,10 +215,8 @@ def merge_batch(
     keep: str = "last",
     batch_id: int = 0,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    retain_history: bool = False,
     partition_col: str | None = None,
     bucket_by: list[str] | None = None,
-    evolve_schema: bool = False,
     touched_buckets: list[int] | None = None,
 ) -> list[int]:
     """Merge one batch into the table, rewriting only touched buckets.
@@ -290,18 +238,20 @@ def merge_batch(
     exactly what ``read_table`` returns: the data columns and the
     partition column. The bucket id is stored only as the ``__b=``
     directory — staged with ``partitionBy``, so no data file carries it.
-    The batch-column check below and every ``read_table`` scan use it.
+    The batch's column names must equal the recorded ones: a batch that
+    adds or omits a column raises ValueError, naming the table, before
+    anything is staged.
 
-    ``evolve_schema=True`` permits ADDITIVE schema evolution: a batch may
-    carry columns the table has never seen and may omit columns older
-    batches wrote (an omitted column NULLs on rows the new batch
-    overwrites — versioned-row semantics). The published schema is the
-    superset, so bucket versions written before a column existed read it
-    as NULL. Key/version/bucket_by/partition columns must always be
-    present.
-
-    Idempotent per (incoming, batch_id): Structured Streaming's replay of
-    a failed batch re-stages and re-publishes the identical result.
+    Idempotent per (incoming, batch_id): a batch id names one batch, so a
+    replay carries the same rows (Structured Streaming re-runs a failed
+    batch with its logged offsets; an index gate's fresh checkpoint
+    re-reads the same source, streaming/index_gate.py) and re-publishes
+    the identical result. A touched bucket whose current version is
+    already ``batch_id`` (the batch published before it failed) is left
+    as it is: that dir is live, so it is never deleted or renamed over.
+    A reused batch id carrying NEW rows would therefore drop them in
+    such buckets — point a fresh checkpoint over new data at a new
+    table_dir.
 
     ``bucket_by`` (default: the natural key) routes rows to buckets by a
     DIFFERENT column set than the upsert key — the lookup-index shape
@@ -322,23 +272,6 @@ def merge_batch(
     partition value changes across versions: a merge always rewrites the
     WHOLE touched bucket version, so the superseded row's old partition
     dir is superseded with it.
-
-    ``retain_history=True`` additionally snapshots this publish as
-    ``manifest-v{batch_id}.json`` and skips superseded-version GC, so
-    ``read_table(..., at_batch=batch_id)`` can reconstruct this exact
-    state later (time travel); reclaim via vacuum_history + vacuum.
-
-    BATCH-ID UNIQUENESS (retain_history): a reused batch_id must mean
-    "the same batch, replayed" — at-least-once replay (same id, or an old
-    id with stale data, tests/test_streaming.py:250) is safe because the
-    versioned upsert resolves staleness and the manifest swap is atomic.
-    What is NOT safe is re-pointing a stream at a FRESH checkpoint dir
-    over an existing retain_history table: streaming batch ids restart at
-    0, and the retry-overwrite of ``__v={batch_id}`` dirs below would rewrite
-    an old era's version dir and republish its ``manifest-v{id}.json`` —
-    time-travel reads of that id would then silently return the new era's
-    content. When resetting a checkpoint, either start a new table_dir or
-    vacuum_history + vacuum the old one first.
     """
     route = bucket_by or natural_key
     inc = incoming.withColumn(BUCKET_DIR, bucket_expr(route, n_buckets))
@@ -374,29 +307,21 @@ def merge_batch(
         # the batch happens to touch (an empty target bucket must not
         # exempt a drifting batch from the check)
         inc_cols = sorted(incoming.columns)
-        if known is not None and not evolve_schema:
-            known_cols = sorted(known.fieldNames())
-            if inc_cols != known_cols:
-                raise ValueError(
-                    f"{table_dir}: batch columns {inc_cols} != table columns "
-                    f"{known_cols} — pass evolve_schema=True for additive "
-                    "schema evolution"
-                )
+        if known is not None and inc_cols != sorted(known.fieldNames()):
+            raise ValueError(
+                f"{table_dir}: batch columns {inc_cols} != table columns "
+                f"{sorted(known.fieldNames())}"
+            )
         # existing rows for ONLY the touched buckets (same-key rows can't
         # live anywhere else — the bucket hash is a pure key function).
-        # When every touched bucket is new, merge against the empty table
-        # so the written frame still carries the columns this batch omits.
+        # When every touched bucket is new, merge against the empty table:
+        # the union widens a narrower batch type (int into a long column)
+        # to the table's, as it does when a touched bucket has rows, so
+        # the published schema still reads the older bucket versions.
         existing = read_table(spark, table_dir, buckets=touched)
         if existing is None and known is not None:
             existing = spark.createDataFrame([], known)
-        merged = upsert(
-            existing,
-            inc.drop(BUCKET_DIR),
-            natural_key,
-            version_col,
-            keep=keep,
-            allow_missing_columns=evolve_schema,
-        )
+        merged = upsert(existing, inc.drop(BUCKET_DIR), natural_key, version_col, keep=keep)
 
         # one write job, laid out per bucket: the bucket id is computed
         # (a pure key hash) under its directory name, and partitionBy
@@ -425,12 +350,13 @@ def merge_batch(
         # current versions remain untouched and referenced by the manifest)
         prev = {str(b): manifest["buckets"].get(str(b)) for b in touched}
         for b, src in staged.items():
+            if prev[str(b)] == batch_id:
+                continue  # published by this batch already: live, left as is
             dst = version_dir(table_dir, b, batch_id)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
-            # dst can pre-exist only when THIS batch_id is being retried
-            # after a crash; its content was already consumed into staging
-            # (the existing-read above ran before any mutation), so
-            # replacing it reproduces the same post-batch state
+            # dst exists only as an unreferenced leftover of this batch's
+            # crashed run (a referenced one is skipped above); staging
+            # holds the same rows
             shutil.rmtree(dst, ignore_errors=True)
             os.replace(src, dst)
 
@@ -445,22 +371,10 @@ def merge_batch(
         }
         _write_manifest_atomic(_manifest_path(table_dir), published)
 
-        if retain_history:
-            # snapshot AFTER the main publish: a crash in between leaves a
-            # consistent current table, merely missing one history entry
-            # (the retry re-publishes both). Old bucket versions stay —
-            # prior snapshots reference them.
-            _write_manifest_atomic(_manifest_path(table_dir, batch_id), published)
-        else:
-            # GC strictly after the swap: failures leave garbage, not loss.
-            # Only versions no snapshot references (mixed-mode tables keep
-            # whatever history they accumulated until vacuum_history).
-            snap_live = _snapshot_paths(table_dir)
-            for b, old_v in prev.items():
-                if old_v is not None and old_v != batch_id:
-                    old = version_dir(table_dir, b, old_v)
-                    if old not in snap_live:
-                        shutil.rmtree(old, ignore_errors=True)
+        # GC strictly after the swap: failures leave garbage, not loss
+        for b, old_v in prev.items():
+            if old_v is not None and old_v != batch_id:
+                shutil.rmtree(version_dir(table_dir, b, old_v), ignore_errors=True)
         shutil.rmtree(staging, ignore_errors=True)
         return touched
     finally:

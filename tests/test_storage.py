@@ -252,7 +252,16 @@ def test_silver_date_partition_prunes_files(spark, tmp_path):
     assert sorted(os.listdir(old)) == sorted([silver.MANIFEST, *(f"b{b}" for b in m["buckets"])])
 
 
-def test_silver_additive_schema_evolution(spark, tmp_path):
+def test_silver_columns_are_fixed_and_opens_read_the_manifest(spark, tmp_path):
+    """A table's column names are fixed: a batch that adds or omits one
+    raises, naming the table, and leaves the manifest and the dir
+    listing as they were. Opens take the manifest schema (no Spark job),
+    which equals what ``read_table`` returns and stays the table's type
+    when a batch lands only in new buckets."""
+    import json
+
+    import pytest as _pytest
+
     from django_indexer_spark.sources import silver
 
     d = str(tmp_path / "evolving")
@@ -260,28 +269,26 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
     def df(rows, schema):
         return spark.createDataFrame(rows, schema)
 
-    # batch 1: original schema across several buckets
+    def listing():
+        return sorted((root, sorted(dirs), sorted(fs)) for root, dirs, fs in os.walk(d))
+
     silver.merge_batch(
         spark, d,
         df([("k1", 10, 1), ("k2", 20, 1), ("k3", 30, 1)], "k string, amount long, version long"),
         ["k"], "version", batch_id=1, n_buckets=4,
     )
-    # batch 2 ADDS a column and touches only k1's bucket
     silver.merge_batch(
-        spark, d,
-        df([("k1", 11, 2, "usd")], "k string, amount long, version long, currency string"),
-        ["k"], "version", batch_id=2, n_buckets=4, evolve_schema=True,
+        spark, d, df([("k1", 11, 2)], "k string, amount long, version long"),
+        ["k"], "version", batch_id=2, n_buckets=4,
     )
-    # the manifest schema is the superset: opening needs no footer merge
-    # and runs no job
+    # opening needs no footer read and runs no job
     t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
     assert jobs == []
-    assert "currency" in t.columns  # superset schema across old buckets
-    assert _manifest_fields(silver, d) == _fields(silver.read_table(spark, d))
-    got = {r["k"]: (r["amount"], r["currency"]) for r in t.collect()}
-    assert got == {"k1": (11, "usd"), "k2": (20, None), "k3": (30, None)}
+    assert _manifest_fields(silver, d) == _fields(t)
+    assert {r["k"]: r["amount"] for r in t.collect()} == {"k1": 11, "k2": 20, "k3": 30}
+    assert not {"__bucket", "__bp", "__b"} & _file_columns(silver, d)
 
-    # bucket-pruned read of an untouched (pre-evolution) bucket still works
+    # bucket-pruned open of an untouched bucket
     b = (
         spark.createDataFrame([("k2",)], "k string")
         .select(silver.bucket_expr(["k"], 4).alias("b"))
@@ -289,25 +296,9 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
     )
     sub, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d, buckets=[b]))
     assert jobs == []
-    assert "currency" in sub.columns
     assert sub.filter(F.col("k") == "k2").count() == 1
 
-    # batch 3 OMITS the original amount column; the row it overwrites
-    # nulls the omitted column (versioned-row, not per-column patch)
-    silver.merge_batch(
-        spark, d,
-        df([("k2", 3, "eur")], "k string, version long, currency string"),
-        ["k"], "version", batch_id=3, n_buckets=4, evolve_schema=True,
-    )
-    t, jobs = _open_jobs(spark, lambda: silver.read_table(spark, d))
-    assert jobs == []
-    assert _manifest_fields(silver, d) == _fields(silver.read_table(spark, d))
-    got = {r["k"]: (r["amount"], r["currency"]) for r in t.collect()}
-    assert got == {"k1": (11, "usd"), "k2": (None, "eur"), "k3": (30, None)}
-    assert not {"__bucket", "__bp", "__b"} & _file_columns(silver, d)
-
-    # a batch landing only in a NEW bucket and omitting a column keeps
-    # that column in the published schema
+    # a key whose bucket the table does not have yet
     used = set(silver.read_manifest(d)["buckets"])
     new_key = next(
         r["k"]
@@ -316,29 +307,32 @@ def test_silver_additive_schema_evolution(spark, tmp_path):
         .collect()
         if str(r["b"]) not in used
     )
+
+    # a batch that adds a column (here into a new bucket) or omits one is
+    # rejected before it stages anything
+    manifest, before = silver.read_manifest(d), listing()
+    for rows, schema in (
+        ([(new_key, 1, 4, True)], "k string, amount long, version long, extra boolean"),
+        ([("k2", 3)], "k string, version long"),
+    ):
+        with _pytest.raises(ValueError, match="evolving: batch columns"):
+            silver.merge_batch(
+                spark, d, df(rows, schema), ["k"], "version", batch_id=4, n_buckets=4
+            )
+        assert silver.read_manifest(d) == manifest
+        assert listing() == before
+
+    # a batch landing only in a NEW bucket with a narrower type (int into
+    # a long column) publishes the table's type, so older buckets still read
     silver.merge_batch(
-        spark, d,
-        df([(new_key, 5, "gbp")], "k string, version long, currency string"),
-        ["k"], "version", batch_id=5, n_buckets=4, evolve_schema=True,
+        spark, d, df([(new_key, 5, 5)], "k string, amount int, version long"),
+        ["k"], "version", batch_id=5, n_buckets=4,
     )
-    got = {r["k"]: (r["amount"], r["currency"]) for r in silver.read_table(spark, d).collect()}
-    assert got == {
-        "k1": (11, "usd"), "k2": (None, "eur"), "k3": (30, None), new_key: (None, "gbp")
-    }
-
-    # without evolve_schema a new column is a hard error, not silent drift
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        silver.merge_batch(
-            spark, d,
-            df([("k4", 1, 4, True)], "k string, amount long, version long, extra boolean"),
-            ["k"], "version", batch_id=4, n_buckets=4,
-        )
+    assert _manifest_fields(silver, d) == _fields(t)
+    got = {r["k"]: r["amount"] for r in silver.read_table(spark, d).collect()}
+    assert got == {"k1": 11, "k2": 20, "k3": 30, new_key: 5}
 
     # readers never infer a schema: a manifest without one names the table
-    import json
-
     m = silver.read_manifest(d)
     del m["schema"]
     with open(os.path.join(d, "manifest.json"), "w") as f:

@@ -145,41 +145,6 @@ def _kv(spark, rows_):
     return spark.createDataFrame(rows_, "k string, v string, version long")
 
 
-def test_silver_time_travel_and_history_vacuum(spark, tmp_path):
-    """retain_history keeps every published state readable at_batch=N
-    (snapshot isolation: old bucket dirs are immutable and referenced);
-    vacuum honors snapshots; vacuum_history + vacuum reclaims them."""
-    d = str(tmp_path / "t")
-
-    def state(at=None):
-        df = silver.read_table(spark, d, at_batch=at)
-        return {} if df is None else {r["k"]: (r["v"], r["version"]) for r in df.collect()}
-
-    silver.merge_batch(spark, d, _kv(spark, [("a", "a1", 1), ("b", "b1", 1)]),
-                       ["k"], "version", batch_id=1, n_buckets=4, retain_history=True)
-    silver.merge_batch(spark, d, _kv(spark, [("a", "a2", 2), ("c", "c2", 2)]),
-                       ["k"], "version", batch_id=2, n_buckets=4, retain_history=True)
-    silver.merge_batch(spark, d, _kv(spark, [("b", "b3", 3)]),
-                       ["k"], "version", batch_id=3, n_buckets=4, retain_history=True)
-
-    assert silver.history(d) == [1, 2, 3]
-    assert state(at=1) == {"a": ("a1", 1), "b": ("b1", 1)}
-    assert state(at=2) == {"a": ("a2", 2), "b": ("b1", 1), "c": ("c2", 2)}
-    assert state(at=3) == state() == {"a": ("a2", 2), "b": ("b3", 3), "c": ("c2", 2)}
-
-    # vacuum with snapshots live reclaims nothing a snapshot needs
-    silver.vacuum(d)
-    assert state(at=1) == {"a": ("a1", 1), "b": ("b1", 1)}
-
-    # drop history to the latest snapshot, then vacuum reclaims the rest
-    assert silver.vacuum_history(d, keep_last=1) == [1, 2]
-    removed = silver.vacuum(d)
-    assert removed  # superseded bucket versions now actually freed
-    assert silver.history(d) == [3]
-    assert state(at=1) == {}  # snapshot gone
-    assert state(at=3) == state()  # current unaffected
-
-
 def test_silver_merge_rewrites_only_touched_buckets(spark, tmp_path):
     d = str(tmp_path / "t")
     silver.merge_batch(
@@ -225,40 +190,129 @@ def test_silver_merge_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 def test_silver_crash_before_publish_never_truncates(spark, tmp_path, monkeypatch):
-    import pytest as _pytest
+    """A crash at each step of merge_batch — after the staged write,
+    mid-rename of a two-bucket batch, at the publish, during GC, and in a
+    replay of a batch that already published — leaves the manifest
+    exactly the old or the new one, and the table reads fully as that
+    state. Two replays then equal a clean run, and vacuum removes only
+    the crash's debris."""
+    import shutil
 
+    batch1 = [(k, k, 1) for k in "abcdefgh"]  # buckets 0, 2 and 3 of 4
+    batch2 = [("a", "A", 2), ("c", "C", 2)]  # buckets 0 and 2
+
+    def merge(d, rows_, batch_id):
+        return silver.merge_batch(
+            spark, d, _kv(spark, rows_), ["k"], "version", batch_id=batch_id, n_buckets=4
+        )
+
+    def state(d):
+        return sorted(map(tuple, silver.read_table(spark, d).collect()))
+
+    def layout(d):
+        return sorted(
+            os.path.relpath(os.path.join(root, x), d) for root, dirs, _ in os.walk(d) for x in dirs
+        )
+
+    clean = str(tmp_path / "clean")
+    merge(clean, batch1, 1)
+    old, m_old = state(clean), silver.read_manifest(clean)
+    assert merge(clean, batch2, 2) == [0, 2] and len(m_old["buckets"]) == 3
+    new, m_new = state(clean), silver.read_manifest(clean)
+
+    real_replace, real_rmtree = os.replace, shutil.rmtree
+    fired = []
+
+    def crash():
+        fired.append(True)
+        raise RuntimeError("simulated crash")
+
+    def replace_failing(is_target):
+        staged = []
+
+        def fake(src, dst):
+            if ".staging-" in str(src):
+                staged.append(src)
+            if is_target(src, dst, len(staged)):
+                crash()
+            return real_replace(src, dst)
+
+        return fake
+
+    faults = {  # step -> (module, attribute, fake, (manifest, rows) the crash leaves)
+        "staged": (os, "replace", replace_failing(lambda src, dst, n: n == 1), (m_old, old)),
+        "mid-rename": (os, "replace", replace_failing(lambda src, dst, n: n == 2), (m_old, old)),
+        "publish": (
+            os, "replace",
+            replace_failing(lambda src, dst, n: str(dst).endswith(silver.MANIFEST)), (m_old, old),
+        ),
+        "gc": (
+            shutil, "rmtree",
+            lambda p, *a, **kw: crash() if str(p).endswith("__v=1") else real_rmtree(p, *a, **kw),
+            (m_new, new),
+        ),
+        # every staged rename fails: a replay may not rename over live dirs
+        "replay": (os, "replace", replace_failing(lambda src, dst, n: n > 0), (m_new, new)),
+    }
+    for step, (module, name, fake, (expect_manifest, expect_rows)) in faults.items():
+        d = str(tmp_path / step)
+        merge(d, batch1, 1)
+        if step == "replay":
+            merge(d, batch2, 2)
+        fired.clear()
+        with monkeypatch.context() as mp:
+            mp.setattr(module, name, fake)
+            try:
+                merge(d, batch2, 2)
+            except RuntimeError:
+                pass
+        assert fired or step == "replay", step
+        assert silver.read_manifest(d) == expect_manifest, step
+        assert state(d) == expect_rows, step
+
+        # Structured Streaming retries the SAME batch_id: the rerun
+        # converges to the clean post-batch state, twice over
+        for _ in range(2):
+            merge(d, batch2, 2)
+        assert silver.read_manifest(d) == m_new and state(d) == new, step
+        live = set(silver.current_paths(d, m_new))
+        assert not live & set(silver.vacuum(d)), step
+        assert state(d) == new and layout(d) == layout(clean), step
+
+
+def test_silver_replay_of_a_published_batch_keeps_its_live_dirs(spark, tmp_path, monkeypatch):
+    """A replay of a batch whose merge already published (its merges
+    finished before the streaming commit log was written, or an index
+    gate restarted on a fresh checkpoint) never deletes or renames over
+    the version dirs the manifest references: with every staged rename
+    failing, the live dirs keep their files and the table reads as
+    published."""
     d = str(tmp_path / "t")
-    silver.merge_batch(
-        spark, d, _kv(spark, [("a", "a", 1), ("b", "b", 1)]), ["k"], "version",
-        batch_id=1, n_buckets=4,
-    )
-    before = sorted(map(tuple, silver.read_table(spark, d).collect()))
-    manifest_before = silver.read_manifest(d)
 
-    # crash INSIDE batch 2, after staging + version-dir moves, right at the
-    # publish step: the old manifest must stay live and fully readable
-    def boom(*a, **kw):
-        raise RuntimeError("simulated crash at publish")
-
-    monkeypatch.setattr(silver, "_write_manifest_atomic", boom)
-    with _pytest.raises(RuntimeError, match="simulated crash"):
+    def merge(rows_, batch_id):
         silver.merge_batch(
-            spark, d, _kv(spark, [("a", "A", 2)]), ["k"], "version",
-            batch_id=2, n_buckets=4,
+            spark, d, _kv(spark, rows_), ["k"], "version", batch_id=batch_id, n_buckets=4
         )
-    monkeypatch.undo()
 
-    assert silver.read_manifest(d) == manifest_before
-    assert sorted(map(tuple, silver.read_table(spark, d).collect())) == before
+    merge([("a", "a", 1), ("b", "b", 1)], 1)
+    merge([("a", "A", 2)], 2)
+    manifest = silver.read_manifest(d)
+    live = {p: sorted(os.listdir(p)) for p in silver.current_paths(d, manifest)}
+    real_replace = os.replace
 
-    # Structured Streaming retries the SAME batch_id: the rerun must
-    # converge to the correct post-batch state (idempotent republish) —
-    # run it twice to prove replay-safety
-    for _ in range(2):
-        silver.merge_batch(
-            spark, d, _kv(spark, [("a", "A", 2)]), ["k"], "version",
-            batch_id=2, n_buckets=4,
-        )
+    def replace(src, dst):
+        if ".staging-" in str(src):
+            raise RuntimeError("simulated crash mid-rename")
+        return real_replace(src, dst)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", replace)
+        try:
+            merge([("a", "A", 2)], 2)
+        except RuntimeError:
+            pass
+    assert silver.read_manifest(d) == manifest
+    assert {p: sorted(os.listdir(p)) if os.path.isdir(p) else None for p in live} == live
     out = {r["k"]: (r["v"], r["version"]) for r in silver.read_table(spark, d).collect()}
     assert out == {"a": ("A", 2), "b": ("b", 1)}
 
